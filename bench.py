@@ -183,6 +183,7 @@ def main() -> None:
         "sentinel_sec": {"before": sentinel_before, "after": sentinel_after},
         "sf": sf,
         "freshness_sec": freshness,
+        "freshness_trigger_sec": FRESHNESS_TRIGGER_SEC,
         "compaction_sec": compaction,
     }
     # The driver captures only the tail (~2000 chars) of stdout; rounds 9-11
@@ -258,12 +259,19 @@ def _sentinel() -> float:
     return round(best, 4)
 
 
+# Production micro-batch trigger interval: the worst-case scheduling delay
+# a record waits before its batch starts. Reported beside the measured
+# ingest time, never added into it, so ``freshness_sec`` stays a
+# measurement. End-to-end freshness = freshness_sec + this; reference
+# parity target: Firehose buffers 60–300 s + Lambda transform, 'within
+# minutes' per web-analytics-iceberg/README.md — ≤ 300 s here.
+FRESHNESS_TRIGGER_SEC = 60.0
+
+
 def _measure_freshness(spark) -> float:
     """Ingest→queryable latency (VERDICT r1 #7): land 1000 records, drain one
-    validated micro-batch into the raw zone, and report processing wall time
-    + the 60 s production trigger interval (worst-case scheduling delay).
-    Reference parity target: Firehose buffers 60–300 s + Lambda transform,
-    'within minutes' per web-analytics-iceberg/README.md — ≤ 300 s here."""
+    validated micro-batch into the raw zone, read it back, and report that
+    measured wall time (the trigger wait is ``FRESHNESS_TRIGGER_SEC``)."""
     import json as _json
     import shutil
     import tempfile
@@ -291,7 +299,7 @@ def _measure_freshness(spark) -> float:
         n = spark.read.text(os.path.join(work, "raw"), recursiveFileLookup=True).count()
         elapsed = time.perf_counter() - t0
         assert n == 1000, n
-        return round(elapsed + 60.0, 2)
+        return round(elapsed, 2)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -134,8 +134,10 @@ def test_cli_ref_verbs(spark, tmp_path, capsys):
 
 
 def test_cli_clone_and_upgrade_verbs(spark, tmp_path, capsys):
-    """Round 10: shallow clone, marker release, and the manifest upgrade
-    are CLI-reachable — all metadata-only (no Spark session), exit-coded."""
+    """Round 10: shallow clone and marker release are CLI-reachable —
+    metadata-only (no Spark session), exit-coded. The format-migration
+    verbs are gone with the formats they migrated: with one manifest
+    format there is nothing to upgrade or convert, so they are unknown."""
     from web_analytics_on_aws_spark.sources.snapshots import (
         commit_append,
         read_snapshot,
@@ -150,7 +152,7 @@ def test_cli_clone_and_upgrade_verbs(spark, tmp_path, capsys):
     assert main(["snapshot", t, "clone", c]) == 2  # dst already exists
     assert main(["snapshot", t, "drop-clone", c]) == 0
     assert "'markers_removed': 1" in capsys.readouterr().out
-    assert main(["snapshot", t, "upgrade-manifest"]) == 0
-    out = capsys.readouterr().out
-    assert "'upgraded': False" in out  # inline manifest — no-op
+    for verb in ("upgrade-manifest", "convert-segments"):
+        assert main(["snapshot", t, verb]) == 2
+        assert "unknown snapshot subcommand" in capsys.readouterr().err
     assert main(["snapshot", t, "clone"]) == 2  # missing dst = usage

@@ -67,9 +67,9 @@ def _build_sharded(spark, t, n_appends=3):
 
 
 def test_sharded_head_carries_no_file_maps(registered, tmp_path, seg4):
-    """Past the threshold the head is a manifest LIST: table metadata +
-    bounded segment entries, never the per-file maps — head size stops
-    scaling with file count."""
+    """The head is a manifest LIST: table metadata + bounded segment
+    entries, never the per-file maps — head size stops scaling with file
+    count."""
     t = str(tmp_path / "t")
     v = _build_sharded(registered, t)
     head = _read_manifest_head(t, v)
@@ -183,29 +183,57 @@ def test_segment_skipping_on_column_bounds(registered, tmp_path, seg4):
     assert got == 500
 
 
-def test_inline_under_threshold_and_transition(registered, tmp_path):
-    """Tables at or under the threshold keep the inline single-JSON format
-    (legacy fallback is the SAME code path); crossing the threshold
-    transitions in place with no reader change."""
+def _assert_sharded_parquet(t, v):
+    """The head of ``t`` at ``v`` is a manifest list over columnar segments
+    only (no inline per-file maps), and hydration still yields the logical
+    ``files`` / ``file_seq`` / ``file_stats`` shape readers consume."""
+    head = _read_manifest_head(t, v)
+    assert "segments" in head or "groups" in head
+    assert not {"files", "file_seq", "file_stats"} & set(head)
+    segs = S._effective_segments(t, head)
+    assert all(s["path"].endswith(".parquet") for s in segs)
+    segdir = os.path.join(t, "manifests", "segs")
+    names = os.listdir(segdir) if os.path.isdir(segdir) else []
+    assert all(f.endswith(".parquet") for f in names if f.startswith("seg-"))
+    m = _read_manifest(t, v)
+    assert len(m["files"]) == sum(int(s["n"]) for s in segs)
+    assert set(m["file_seq"]) == set(m["files"])
+    assert set(m.get("file_stats", {})) == set(m["files"])
+    return m
+
+
+def test_every_head_shards_into_parquet_segments(registered, tmp_path):
+    """One manifest layout at every table size (Iceberg's manifest list
+    over manifest files): an empty table, a 1-file table and a table
+    overwritten down to one file all publish sharded heads with parquet
+    segments — there is no inline small-table format."""
     spark = registered
+    empty = str(tmp_path / "empty")
+    commit_append(_events(spark, 0, 10).limit(0), empty)
+    assert current_version(empty) == 1
+    _assert_sharded_parquet(empty, 1)
+    assert read_snapshot(spark, empty).count() == 0
+
+    one = str(tmp_path / "one")
+    commit_append(_events(spark, 0, 50).coalesce(1), one)
+    m = _assert_sharded_parquet(one, 1)
+    assert len(m["files"]) == 1 and m["file_seq"] == {m["files"][0]: 1}
+    assert m["file_stats"][m["files"][0]]["rows"] == 50
+
     t = str(tmp_path / "t")
     commit_append(_events(spark, 0, 50).coalesce(2), t)
-    head = _read_manifest_head(t, current_version(t))
-    assert "segments" not in head and "files" in head
-    # cross the threshold
-    os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = "4"
-    try:
-        commit_append(_events(spark, 50, 100).coalesce(3), t)
-        head2 = _read_manifest_head(t, current_version(t))
-        assert head2.get("format") == 2
-        assert read_snapshot(spark, t).count() == 100
-        # and back under it (big overwrite → small table) re-inlines
-        S.commit_overwrite(_events(spark, 0, 10).coalesce(1), t)
-        head3 = _read_manifest_head(t, current_version(t))
-        assert "segments" not in head3
-        assert read_snapshot(spark, t).count() == 10
-    finally:
-        del os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"]
+    commit_append(_events(spark, 50, 100).coalesce(3), t)
+    assert len(_assert_sharded_parquet(t, 2)["files"]) == 5
+    S.commit_overwrite(_events(spark, 0, 10).coalesce(1), t)
+    m = _assert_sharded_parquet(t, current_version(t))
+    assert len(m["files"]) == 1
+    assert read_snapshot(spark, t).count() == 10
+
+
+def test_segment_target_must_be_positive(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MANIFEST_SEGMENT_FILES", "0")
+    with pytest.raises(ValueError, match="must be positive"):
+        S._segment_target()
 
 
 def test_vacuum_gcs_unreferenced_segments(registered, tmp_path, seg4):
@@ -219,12 +247,10 @@ def test_vacuum_gcs_unreferenced_segments(registered, tmp_path, seg4):
     segdir = os.path.join(t, "manifests", "segs")
     n_before = len(os.listdir(segdir))
     # plant an orphan (a lost CAS race's leftover)
-    orphan = os.path.join(segdir, "seg-deadbeefdeadbeef.json")
-    with open(orphan, "w") as f:
-        json.dump({"entries": {}}, f)
+    orphan = os.path.basename(S._write_segment_entries(t, {}))
     S.vacuum(t, retain_last=1)
     names = set(os.listdir(segdir))
-    assert "seg-deadbeefdeadbeef.json" not in names
+    assert orphan not in names
     assert len(names) < n_before + 1
     live = {
         os.path.basename(s["path"])
@@ -485,8 +511,7 @@ def test_raced_append_on_sharded_table(registered, tmp_path, seg4):
     t = str(tmp_path / "t")
     _build_sharded(spark, t)  # v5, sharded
     v = current_version(t)
-    # steal the next version like the inline race test does — but via the
-    # sharded delta publish
+    # steal the next version via a delta publish
     stolen = S._write_data_files(_events(spark, 7000, 7010).coalesce(1), t)
     S._publish(
         t, v + 1, None, "append",
@@ -959,61 +984,15 @@ def test_drop_clone_delete_table_refuses_with_live_forks(
     assert not os.path.isdir(b)
 
 
-def test_upgrade_manifest_backfills_types_zero_data_reads(
+def test_typeless_summaries_fall_back_to_hydration(
     registered, tmp_path, seg4, monkeypatch
 ):
-    """VERDICT r9 #4 pin: a table sharded before the r9 types summaries
-    (simulated by stripping the blocks from the head's group/segment
-    entries) falls back to full hydration on every unmapped schema
-    resolve. upgrade_manifest re-stamps it in ONE metadata commit with
-    ZERO data-file reads (_file_types patched to raise) — after it, the
-    O(head) probe answers and a second run publishes nothing."""
-    import json as J
-
-    from web_analytics_on_aws_spark.sources.snapshot_datasource import (
-        _segments_arrow_schema,
-    )
-
-    spark = registered
-    monkeypatch.setenv("SPARK_GRAFT_MANIFEST_SEGMENTS_PER_GROUP", "2")
-    t = str(tmp_path / "t")
-    _build_sharded(spark, t)
-    v = current_version(t)
-    hp = S._manifest_path(t, v)
-    with open(hp) as f:
-        head = J.load(f)
-    assert head.get("groups"), "fixture must exercise the grouped layer"
-    for s in head.get("groups", []) + head.get("segments", []):
-        s.pop("types", None)
-    with open(hp, "w") as f:
-        J.dump(head, f)
-    assert _segments_arrow_schema(_read_manifest_head(t, v)) is None
-
-    def _boom(p):
-        raise AssertionError(f"data-file read during upgrade: {p}")
-
-    monkeypatch.setattr(S, "_file_types", _boom)
-    res = S.upgrade_manifest(t)
-    monkeypatch.undo()
-    assert res["upgraded"] and res["version"] == v + 1
-    assert res["footer_reads"] == 0 and res["segments_rewritten"] == 0
-    new_head = _read_manifest_head(t, current_version(t))
-    sch = _segments_arrow_schema(new_head)
-    assert sch is not None and set(sch.names) == {"id", "ev", "v"}
-    assert read_snapshot(spark, t).count() == 500
-    # idempotent: nothing left to change, nothing published
-    res2 = S.upgrade_manifest(t)
-    assert not res2["upgraded"] and current_version(t) == v + 1
-
-
-def test_upgrade_manifest_stamps_legacy_entries_from_footers(
-    registered, tmp_path, seg4, monkeypatch
-):
-    """Legacy tier: entries written before per-file types (simulated by a
-    None-returning _file_types during the build) need one FOOTER read per
-    member — the upgrade rewrites those segments as new immutable files
-    (originals keep serving time travel) and the schema probe is O(head)
-    after."""
+    """Files whose types ``_file_types`` cannot record (it returns None
+    for ns-timestamp files; simulated here for every file) leave the
+    segment summaries without a ``types`` block, so the O(head) schema
+    probe declines and readers fall back to hydration + the file walk —
+    current and time-travel reads stay whole. A segment whose members
+    disagree on a column's physical type drops its block the same way."""
     from web_analytics_on_aws_spark.sources.snapshot_datasource import (
         _segments_arrow_schema,
     )
@@ -1025,19 +1004,20 @@ def test_upgrade_manifest_stamps_legacy_entries_from_footers(
     monkeypatch.undo()
     v = current_version(t)
     assert _segments_arrow_schema(_read_manifest_head(t, v)) is None
-    segdir = os.path.join(t, "manifests", "segs")
-    before = set(os.listdir(segdir))
-    res = S.upgrade_manifest(t)
-    assert res["upgraded"] and res["footer_reads"] > 0
-    assert res["segments_rewritten"] > 0
-    # originals still on disk for older versions; new files added
-    assert before <= set(os.listdir(segdir))
-    sch = _segments_arrow_schema(_read_manifest_head(t, current_version(t)))
-    assert sch is not None and set(sch.names) == {"id", "ev", "v"}
-    assert read_snapshot(spark, t).count() == 500
-    assert read_snapshot(spark, t, version=v).count() == 500  # time travel
-    res2 = S.upgrade_manifest(t)
-    assert not res2["upgraded"]
+    df = spark.read.format("snapshot").option("path", t).load()
+    assert set(df.columns) == {"id", "ev", "v"}
+    assert df.count() == 500
+    assert read_snapshot(spark, t, version=v - 1).count() == 400
+
+    typed = str(tmp_path / "typed")
+    _build_sharded(spark, typed)
+    head = _read_manifest_head(typed, current_version(typed))
+    seg = next(s for s in S._effective_segments(typed, head) if s["n"] > 1)
+    assert "types" in seg
+    entries = S._read_segment(typed, seg["path"])["entries"]
+    first = next(iter(entries.values()))
+    first["stats"]["types"]["id"] = "string"  # conflicts with the others
+    assert "types" not in S._summarize_segment(seg["path"], entries)
 
 
 def test_parallel_vacuum_fold_matches_serial(
@@ -1073,44 +1053,6 @@ def test_parallel_vacuum_fold_matches_serial(
         )
     }
     assert set(os.listdir(os.path.join(t, "manifests", "segs"))) == live
-
-
-def test_upgrade_manifest_counter_skips_unupgradeable(
-    registered, tmp_path, seg4
-):
-    """ADVICE r10: a segment whose members GENUINELY disagree on a
-    column's physical type can never gain a types block —
-    segments_resummarized must stay 0 on every re-run over it (the old
-    code counted the attempt before checking the outcome, overstating
-    the CLI verb's work on each run)."""
-    import json as J
-
-    spark = registered
-    t = str(tmp_path / "t")
-    _build_sharded(spark, t)
-    v = current_version(t)
-    hp = S._manifest_path(t, v)
-    with open(hp) as f:
-        head = J.load(f)
-    assert head.get("segments"), "fixture must leave an inline tail"
-    target = head["segments"][0]
-    target.pop("types", None)
-    # plant the member-type conflict through the format-agnostic helpers
-    # (segments are parquet by default now): rewrite the member list to
-    # a fresh segment file and point the head's summary at it
-    entries = S._read_segment(t, target["path"])["entries"]
-    first = next(iter(entries.values()))
-    assert first.get("stats", {}).get("types"), "fixture needs typed entries"
-    first["stats"]["types"]["id"] = "string"  # conflicts with the others
-    target["path"] = S._write_segment_entries(t, entries)
-    with open(hp, "w") as f:
-        J.dump(head, f)
-    for _ in range(2):  # idempotent: counters stay 0 on every re-run
-        res = S.upgrade_manifest(t)
-        assert not res["upgraded"]
-        assert res["segments_resummarized"] == 0
-        assert res["segments_rewritten"] == 0
-        assert current_version(t) == v
 
 
 def test_metadata_ddl_reads_no_segments_on_mapped_sharded(

@@ -54,6 +54,45 @@ def _stats_full(table):
     return _read_manifest(table, current_version(table)).get("file_stats", {})
 
 
+def _guard_data_footers(monkeypatch, on_open):
+    """Route every ``pq.ParquetFile`` open of a DATA file through
+    ``on_open``. Manifest segments are parquet too and open normally: the
+    guards pin footer I/O on data files, not manifest reads."""
+    import pyarrow.parquet as pq
+
+    real = pq.ParquetFile
+    segdir = os.path.join("manifests", "segs") + os.sep
+
+    def guarded(path, *a, **kw):
+        if segdir not in str(path):
+            on_open(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", guarded)
+
+
+def _strip_head_stats(table):
+    """Simulate a pre-stats commit: re-home every entry of the head's
+    segments, minus its stats, into one new segment (whose summary then
+    carries no bounds either) and point the head at it."""
+    import json
+
+    from web_analytics_on_aws_spark.sources import snapshots as S
+
+    v = current_version(table)
+    head = S._read_manifest_head(table, v)
+    entries = {}
+    for seg in S._effective_segments(table, head):
+        for p, e in S._read_segment(table, seg["path"])["entries"].items():
+            e.pop("stats", None)
+            entries[p] = e
+    rel = S._write_segment_entries(table, entries)
+    head.pop("groups", None)
+    head["segments"] = [S._summarize_segment(rel, entries)]
+    with open(S._manifest_path(table, v), "w") as fh:
+        json.dump(head, fh)
+
+
 def _mk(spark, tmp_path, name="t"):
     t = str(tmp_path / name)
     # three value-disjoint files: k in [0,10), [100,110), [200,210)
@@ -91,16 +130,8 @@ def test_planning_skips_without_footer_io(registered, tmp_path, monkeypatch):
     t = _mk(registered, tmp_path)
     from pyspark.sql.datasource import EqualTo, GreaterThan, In, LessThan
 
-    import pyarrow.parquet as pq
-
-    real = pq.ParquetFile
     opens = []
-
-    def counting(path, *a, **kw):
-        opens.append(path)
-        return real(path, *a, **kw)
-
-    monkeypatch.setattr(pq, "ParquetFile", counting)
+    _guard_data_footers(monkeypatch, opens.append)
     assert _kept(t, [EqualTo(("k",), 105)]) == 1
     assert _kept(t, [GreaterThan(("k",), 150)]) == 1
     assert _kept(t, [LessThan(("k",), 50)]) == 1
@@ -180,24 +211,9 @@ def test_legacy_manifest_footer_fallback(registered, tmp_path):
     """Tables committed before file_stats existed keep pruning via the
     footer path — drop the stats block from the head manifest and verify
     identical pruning."""
-    import json
-    import os
-
     t = _mk(registered, tmp_path)
-    v = current_version(t)
-    mp = os.path.join(t, "manifests", f"v{v:012d}.json")
-    if not os.path.exists(mp):
-        mp = [
-            os.path.join(t, "manifests", f)
-            for f in os.listdir(os.path.join(t, "manifests"))
-            if f.endswith(".json")
-        ][-1]
-    with open(mp) as fh:
-        m = json.load(fh)
-    m.pop("file_stats", None)
-    os.remove(mp)
-    with open(mp, "w") as fh:
-        json.dump(m, fh)
+    _strip_head_stats(t)
+    assert not _stats_full(t)
     from pyspark.sql.datasource import EqualTo
 
     assert _kept(t, [EqualTo(("k",), 105)]) == 1  # footer stats still prune
@@ -289,12 +305,10 @@ def test_rows_bytes_in_stats_and_footer_free_statistics(
     assert sorted(e["rows"] for e in full.values()) == [10, 10, 10]
     assert all(e["bytes"] > 0 for e in full.values())
 
-    import pyarrow.parquet as pq
-
-    def boom(*a, **kw):
+    def boom(path):
         raise AssertionError("table_statistics opened a footer")
 
-    monkeypatch.setattr(pq, "ParquetFile", boom)
+    _guard_data_footers(monkeypatch, boom)
     st = table_statistics(t)
     assert st == {
         "row_count": 30,
@@ -324,12 +338,10 @@ def test_show_table_partitions_manifest_only(registered, tmp_path, monkeypatch):
     set_partition_spec(spark, t, [("ev", "identity")])
     commit_append(df, t)
 
-    import pyarrow.parquet as pq
-
-    def boom(*a, **kw):
+    def boom(path):
         raise AssertionError("show_table_partitions opened a footer")
 
-    monkeypatch.setattr(pq, "ParquetFile", boom)
+    _guard_data_footers(monkeypatch, boom)
     parts = show_table_partitions(t)
     by_val = {
         p["values"]["ev"]: p for p in parts if p["values"] is not None
@@ -410,8 +422,6 @@ def test_partition_census_counts_statsless_groups(registered, tmp_path):
     returns rows=None for those, by contract). Such groups fall back to
     one scan of exactly their files; stats-backed groups stay
     manifest-only."""
-    import json
-
     import pyspark.sql.functions as F
 
     from web_analytics_on_aws_spark.sources.partitioning import (
@@ -429,18 +439,8 @@ def test_partition_census_counts_statsless_groups(registered, tmp_path):
     commit_append(df1.limit(0), t)
     set_partition_spec(spark, t, [("ev", "identity")])
     commit_append(df1, t)
-    # simulate a legacy (pre-stats) commit: strip this head's file_stats
-    v = current_version(t)
-    mp = os.path.join(t, "manifests", sorted(
-        f for f in os.listdir(os.path.join(t, "manifests"))
-        if f.endswith(".json")
-    )[-1])
-    with open(mp) as fh:
-        m = json.load(fh)
-    m.pop("file_stats", None)
-    os.remove(mp)
-    with open(mp, "w") as fh:
-        json.dump(m, fh)
+    # simulate a legacy (pre-stats) commit: strip this head's file stats
+    _strip_head_stats(t)
     # a later, stats-carrying commit adds a third value + more of 'view'
     df2 = spark.range(500, 560).select(
         F.col("id"),

@@ -1,12 +1,10 @@
 """Columnar (parquet) manifest segments — round 12.
 
 The r9/r10-documented next tier of the metadata plane (SCALE.md: the
-10M-file vacuum was ONE stdlib-JSON parse of 2.76 GB — 399 s): new
-segments are written as parquet with ``part``/``stats`` as compact-JSON
-string columns, reads dispatch on the file extension (mixed tables and
-forks across the format change read seamlessly), and the vacuum
-live-set fold reads the dictionary-encoded ``path`` column alone.
-``convert_segment_format`` migrates a table in one metadata commit.
+10M-file vacuum was ONE stdlib-JSON parse of 2.76 GB — 399 s): segments
+are parquet with ``part``/``stats`` as compact-JSON string columns, and
+the vacuum live-set fold reads the dictionary-encoded ``path`` column
+alone. It is the only segment format.
 
 Reference parity note: Iceberg stores manifests as Avro for the same
 reason (column-skippable, compact); the reference's managed-Iceberg
@@ -16,7 +14,6 @@ tables (web-analytics-iceberg/README.md) get this for free from AWS.
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 import pyspark.sql.functions as F
@@ -62,8 +59,8 @@ def _build_sharded(spark, t, n_appends=3):
     return current_version(t)
 
 
-def _segs(t, ext):
-    return glob.glob(os.path.join(t, "manifests", "segs", f"seg-*.{ext}"))
+def _segs(t):
+    return glob.glob(os.path.join(t, "manifests", "segs", "seg-*.parquet"))
 
 
 def _hydrated_maps(t, v):
@@ -75,48 +72,24 @@ def _hydrated_maps(t, v):
 
 
 def test_parquet_default_roundtrips_exactly(registered, tmp_path, seg4):
-    """New segments are parquet by default, and the entry maps survive
-    the columnar hop byte-exactly: converting the table to JSON and back
-    hydrates identical logical manifests (partition tuples, stats with
-    encoded timestamp/decimal bounds, per-file types — all of it)."""
+    """Every segment is parquet, and the entry maps survive the columnar
+    hop byte-exactly: re-writing each segment's entries yields identical
+    entries (partition tuples, stats, per-file types — all of it)."""
     spark = registered
     t = str(tmp_path / "t")
     v = _build_sharded(spark, t)
-    assert _segs(t, "parquet") and not _segs(t, "json")
+    segdir = os.path.join(t, "manifests", "segs")
+    assert _segs(t) and all(
+        f.endswith(".parquet") for f in os.listdir(segdir) if f.startswith("seg-")
+    )
     before = _hydrated_maps(t, v)
     assert before["file_partitions"] and before["file_stats"]
-
-    r1 = S.convert_segment_format(t, "json")
-    assert r1["converted"] and r1["segments_rewritten"] > 0
-    assert _hydrated_maps(t, r1["version"]) == before
-    r2 = S.convert_segment_format(t, "parquet")
-    assert r2["converted"]
-    assert _hydrated_maps(t, r2["version"]) == before
+    head = S._read_manifest_head(t, v)
+    for seg in S._effective_segments(t, head):
+        entries = S._read_segment(t, seg["path"])["entries"]
+        rel = S._write_segment_entries(t, entries)
+        assert S._read_segment(t, rel)["entries"] == entries
     assert read_snapshot(spark, t).count() == 500
-
-
-def test_mixed_format_table_reads_filters_and_vacuums(
-    registered, tmp_path, seg4, monkeypatch
-):
-    """A table whose manifest holds BOTH json and parquet segments (a
-    format change mid-life) plans, filters, and vacuums correctly —
-    reads dispatch per segment file, never per table."""
-    spark = registered
-    t = str(tmp_path / "t")
-    monkeypatch.setenv("SPARK_GRAFT_SEGMENT_FORMAT", "json")
-    _build_sharded(spark, t, n_appends=1)
-    monkeypatch.delenv("SPARK_GRAFT_SEGMENT_FORMAT")
-    commit_append(_events(spark, 300, 400), t)
-    assert _segs(t, "json") and _segs(t, "parquet")
-
-    ds = spark.read.format("snapshot").option("path", t).load()
-    assert ds.count() == 400
-    ds2 = spark.read.format("snapshot").option("path", t).load()
-    assert ds2.filter("ev = 2").count() == 80
-
-    S.commit_overwrite(_events(spark, 0, 30), t)
-    assert S.vacuum(t, retain_last=1) > 0
-    assert read_snapshot(spark, t).count() == 30
 
 
 def test_vacuum_fold_reads_only_path_column(registered, tmp_path, seg4):
@@ -150,107 +123,12 @@ def test_vacuum_fold_reads_only_path_column(registered, tmp_path, seg4):
     }
 
 
-def test_convert_is_metadata_only_and_idempotent(
-    registered, tmp_path, seg4
-):
-    """convert_segment_format publishes ONE commit, opens nothing under
-    data/, leaves prior versions readable (old segment files keep
-    serving them until vacuum), and re-runs publish nothing."""
-    import pyarrow.parquet as pq
-
-    spark = registered
-    t = str(tmp_path / "t")
-    os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = "json"
-    try:
-        v = _build_sharded(spark, t)
-    finally:
-        del os.environ["SPARK_GRAFT_SEGMENT_FORMAT"]
-    n_json = len(_segs(t, "json"))
-
-    opened = []
-    real = pq.ParquetFile.__init__
-
-    def guard(self, source, *a, **k):
-        opened.append(str(source))
-        return real(self, source, *a, **k)
-
-    pq.ParquetFile.__init__ = guard
-    try:
-        r = S.convert_segment_format(t)
-    finally:
-        pq.ParquetFile.__init__ = real
-    assert r["converted"] and r["version"] == v + 1
-    assert r["segments_rewritten"] == n_json
-    assert not [p for p in opened if f"{os.sep}data{os.sep}" in p]
-
-    # prior version still reads through the original json segments
-    assert read_snapshot(spark, t, version=v).count() == 500
-    assert read_snapshot(spark, t).count() == 500
-    # idempotent — and vacuum then GCs the unreferenced json segments
-    assert S.convert_segment_format(t) == {
-        "converted": False,
-        "segments_rewritten": 0,
-        "version": v + 1,
-        "format": "parquet",
-    }
-    S.vacuum(t, retain_last=1)
-    assert not _segs(t, "json")
-    assert read_snapshot(spark, t).count() == 500
-
-
-def test_convert_clone_unshares_metadata_plane(
-    registered, tmp_path, seg4
-):
-    """Converting a zero-copy CLONE rewrites the foreign segments it
-    references into the clone's OWN segdir (data files stay shared), so
-    the clone's metadata stops depending on the source's segment files —
-    and the source's vacuum keeps protecting the shared data through the
-    clone marker walk of the clone's now-local manifests."""
-    from web_analytics_on_aws_spark.sources.refs import clone_table
-
-    spark = registered
-    a = str(tmp_path / "A")
-    b = str(tmp_path / "B")
-    _build_sharded(spark, a)
-    clone_table(a, b)
-    assert not glob.glob(os.path.join(b, "manifests", "segs", "*"))
-
-    r = S.convert_segment_format(b, "json")
-    assert r["converted"] and _segs(b, "json")
-    assert read_snapshot(spark, b).count() == 500
-    # source untouched: same segment files, still all parquet
-    assert not _segs(a, "json")
-
-    # strand source's old version; its vacuum must keep the clone whole
-    S.commit_overwrite(_events(spark, 0, 25), a)
-    S.vacuum(a, retain_last=1)
-    assert read_snapshot(spark, b).count() == 500
-    assert read_snapshot(spark, a).count() == 25
-
-
-def test_cli_convert_segments(registered, tmp_path, seg4, capsys):
-    from web_analytics_on_aws_spark.__main__ import main
-
-    spark = registered
-    t = str(tmp_path / "t")
-    os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = "json"
-    try:
-        _build_sharded(spark, t, n_appends=1)
-    finally:
-        del os.environ["SPARK_GRAFT_SEGMENT_FORMAT"]
-    assert main(["snapshot", t, "convert-segments", "parquet"]) == 0
-    out = capsys.readouterr().out
-    assert "'converted': True" in out
-    assert _segs(t, "parquet")
-    assert read_snapshot(spark, t).count() == 300
-
-
 def test_missing_parquet_segment_raises_filenotfound(
     registered, tmp_path, seg4
 ):
     """The commit-safety contract of _segmentize._entries depends on
-    missing segments surfacing as FileNotFoundError regardless of
-    format (pyarrow raises it for absent paths like open() does)."""
+    missing segments surfacing as FileNotFoundError (pyarrow raises it
+    for absent paths like open() does)."""
     spark = registered
     t = str(tmp_path / "t")
     _build_sharded(spark, t, n_appends=1)
@@ -264,9 +142,9 @@ def test_missing_parquet_segment_raises_filenotfound(
 
 
 def test_entries_without_part_or_stats_survive_the_hop(tmp_path):
-    """Null columns reconstruct to ABSENT keys — the legacy entry shape
-    — not explicit Nones (the _segmentize ok-check compares with .get,
-    but upgrade_manifest compares dicts exactly)."""
+    """Null columns reconstruct to ABSENT keys, not explicit Nones — the
+    entry shape every writer builds, so reused and rewritten segments
+    compare equal."""
     t = str(tmp_path / "t")
     entries = {
         "/d/a.parquet": {"seq": 1},
@@ -276,75 +154,20 @@ def test_entries_without_part_or_stats_survive_the_hop(tmp_path):
             "stats": {"rows": 5, "cols": {"id": [0, 4]}},
         },
     }
-    rel = S._write_segment_entries(t, entries, fmt="parquet")
+    rel = S._write_segment_entries(t, entries)
     assert rel.endswith(".parquet")
     assert S._read_segment(t, rel)["entries"] == entries
     assert S._segment_entry_paths(t, rel) == list(entries)
 
 
-def test_convert_loses_cas_race_cleanly(
-    registered, tmp_path, seg4, monkeypatch
-):
-    """A concurrent append claiming v+1 mid-convert makes
-    convert_segment_format's publish raise CommitConflict; the appended
-    data wins, the table stays fully readable, and the loser's
-    already-written segment files are unreferenced orphans that vacuum
-    GCs under the normal grace rules."""
-    spark = registered
-    t = str(tmp_path / "t")
-    os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = "json"
-    try:
-        _build_sharded(spark, t, n_appends=1)
-    finally:
-        del os.environ["SPARK_GRAFT_SEGMENT_FORMAT"]
-    v = current_version(t)
-
-    real_pack = S._pack_groups
-    raced = {"done": False}
-
-    def pack_and_race(table, clean, pool):
-        if not raced["done"]:
-            raced["done"] = True
-            commit_append(_events(spark, 900, 950), t)  # claims v+1
-        return real_pack(table, clean, pool)
-
-    monkeypatch.setattr(S, "_pack_groups", pack_and_race)
-    with pytest.raises(S.CommitConflict):
-        S.convert_segment_format(t)
-    monkeypatch.undo()
-
-    assert current_version(t) == v + 1  # the append's commit
-    assert read_snapshot(spark, t).count() == 350
-    n_before = len(_segs(t, "parquet"))
-    assert n_before > 0  # loser's converted segments linger as orphans
-    S.vacuum(t, retain_last=10, orphan_grace_seconds=0)
-    # every surviving segment is referenced by a retained head; the
-    # loser's parquet orphans are gone and the table still reads whole
-    assert read_snapshot(spark, t).count() == 350
-    retained = {
-        os.path.basename(s["path"])
-        for vv in S._versions(t)
-        for s in S._effective_segments(
-            t, S._read_manifest_head(t, vv)
-        )
-    }
-    on_disk = set(os.listdir(os.path.join(t, "manifests", "segs")))
-    assert {f for f in on_disk if f.startswith("seg-")} <= retained
-
-
 def test_metadata_table_manifests(registered, tmp_path, seg4):
     """Iceberg's ``table$manifests`` analog: one row per manifest
-    segment of the current head with its storage format, member count,
-    on-disk bytes and recorded path range — summaries only (the head/
-    group layer carries everything), mixed formats reported as such,
-    inline heads as zero rows."""
+    segment of the current head with its member count, on-disk bytes and
+    recorded path range — summaries only (the head/group layer carries
+    everything)."""
     spark = registered
     t = str(tmp_path / "t")
-    os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = "json"
-    try:
-        _build_sharded(spark, t, n_appends=1)
-    finally:
-        del os.environ["SPARK_GRAFT_SEGMENT_FORMAT"]
+    _build_sharded(spark, t, n_appends=1)
     commit_append(_events(spark, 300, 400), t)
 
     seen = []
@@ -360,20 +183,11 @@ def test_metadata_table_manifests(registered, tmp_path, seg4):
     finally:
         S._read_segment = real
     assert seen == []  # summaries only, zero segment opens
-    fmts = {r["format"] for r in rows}
-    assert fmts == {"json", "parquet"}
+    assert len(rows) > 1
+    assert all(r["path"].endswith(".parquet") for r in rows)
     assert sum(r["n_files"] for r in rows) == len(
         S._read_manifest(t, current_version(t))["files"]
     )
     for r in rows:
         assert r["size_bytes"] > 0 and r["lo_path"] <= r["hi_path"]
         assert r["record_count"] is not None  # every member carries stats
-
-    # inline (format-1) table: no manifest files to report
-    t2 = str(tmp_path / "t2")
-    os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = "0"
-    try:
-        commit_append(_events(spark, 0, 10).coalesce(1), t2)
-    finally:
-        os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = "4"
-    assert S.metadata_table(spark, t2, "manifests").count() == 0

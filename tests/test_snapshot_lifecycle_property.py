@@ -410,7 +410,7 @@ def test_lifecycle_property_over_sharded_manifests(spark, monkeypatch):
     merge/delete, MOR position/equality deletes, upserts, restores,
     maintenance, spec/sort/widen metadata commits, refs — crosses the
     SHARDED manifest path (delta publishes, sight-unseen segment reuse,
-    tiny-segment folding, hydration) instead of the inline format. Same
+    tiny-segment folding, hydration) at its most fragmented. Same
     three-reader agreement contract; the manifest layout must be
     invisible."""
     monkeypatch.setenv("SPARK_GRAFT_MANIFEST_SEGMENT_FILES", "1")

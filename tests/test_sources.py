@@ -19,11 +19,15 @@ from web_analytics_on_aws_spark.streaming.ingest_stream import run_ingest_once
 def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
     """load_table memoizes the resolved handle + schema per session (driver
     metadata caching, r13) keyed by file identity — a REWRITTEN file must
-    re-resolve, never serve the stale handle."""
+    re-resolve, never serve the stale handle, and its new entry REPLACES
+    the stale one (one entry per path, so the memo stays bounded)."""
     import os
     import shutil
 
-    from web_analytics_on_aws_spark.sources.tables import load_table
+    from web_analytics_on_aws_spark.sources.tables import (
+        _session_memo,
+        load_table,
+    )
 
     sf = tmp_path / "sf"
     sf.mkdir()
@@ -44,6 +48,12 @@ def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
     again = load_table(spark, str(sf), "nation")
     assert again is not first
     assert again.count() == 3 and n_first != 3
+    path = os.path.join(str(sf), "nation.parquet")
+    for kind in ("schema", "handle"):
+        memo = _session_memo(spark, kind)
+        # the stale entry was replaced, not kept beside the new one
+        assert [k for k in memo if str(sf) in str(k)] == [path]
+    assert _session_memo(spark, "handle")[path][1] is again
 
 
 def test_generator_deterministic_and_valid(spark):

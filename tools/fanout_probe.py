@@ -115,13 +115,20 @@ def main() -> None:
         return time.time() - t0, kept
 
     with_stats, kept_a = plan_once()
-    # strip the stats block → footer fallback
+    # strip the stats → footer fallback: re-home the head's entries,
+    # minus their stats, into one stats-less segment
     v = snapshots.current_version(base)
-    mp = snapshots._manifest_path(base, v)
-    m = json.load(open(mp))
-    m.pop("file_stats")
-    os.remove(mp)
-    json.dump(m, open(mp, "w"))
+    head = snapshots._read_manifest_head(base, v)
+    entries = {}
+    for seg in snapshots._effective_segments(base, head):
+        for p, e in snapshots._read_segment(base, seg["path"])["entries"].items():
+            e.pop("stats", None)
+            entries[p] = e
+    rel = snapshots._write_segment_entries(base, entries)
+    head.pop("groups", None)
+    head["segments"] = [snapshots._summarize_segment(rel, entries)]
+    with open(snapshots._manifest_path(base, v), "w") as fh:
+        json.dump(head, fh)
     footer_fallback, kept_b = plan_once()
     assert kept_a == kept_b, (kept_a, kept_b)
     out["planning"] = {

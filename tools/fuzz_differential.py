@@ -711,10 +711,12 @@ def gen_storage_program(seed: int) -> dict:
         "spec": rng.choice(STORAGE_SPECS),
         "sort": rng.choice(STORAGE_SORTS),
         "n_appends": rng.randint(1, 3),
-        "shard": rng.random() < 0.5,  # force tiny manifest segments
-        # two-level heads (VERDICT r8 #3): half the sharded seeds also
-        # force tiny groups, so grouped manifests compose with every other
-        # axis (spec × sort × DML × evolution × refs × time travel)
+        # segment-size axis: tiny manifest segments (3 files) vs the
+        # default target — every head is sharded either way
+        "small_segs": rng.random() < 0.5,
+        # two-level heads (VERDICT r8 #3): half the small-segment seeds
+        # also force tiny groups, so grouped manifests compose with every
+        # other axis (spec × sort × DML × evolution × refs × time travel)
         "group": rng.random() < 0.5,
         # schema-evolution axis (VERDICT r8 #5): column-mapping commits
         # that leave the FINAL logical schema comparable with the DuckDB
@@ -728,7 +730,7 @@ def gen_storage_program(seed: int) -> dict:
         # path r10 moved to planning-attached inline payloads had only
         # hand-written pins — the r9 hole was a COMPOSITION no pin had
         # tried, so equality deletes now draw against every other axis
-        # (shard/group/spec/sort/evolution/refs/clone_chain/timetravel)
+        # (small_segs/group/spec/sort/evolution/refs/clone_chain/timetravel)
         "mutate": rng.choice(
             [
                 "none",
@@ -753,12 +755,6 @@ def gen_storage_program(seed: int) -> dict:
         # data files) — results must be identical before and after, the
         # exact invariant the reference's optimize mirror relies on
         "eq_maint": rng.choice([None, None, "convert", "compact"]),
-        # segment-format axis (round 12): None = columnar parquet (the
-        # default), "json" = whole build legacy, "mixed" = appends in
-        # json then later commits parquet (a table straddling the format
-        # change), "convert" = json build then convert_segment_format —
-        # every layout/DML/refs/evolution draw composes with all four
-        "seg_format": rng.choice([None, None, "json", "mixed", "convert"]),
         # time-travel axis: re-read the pre-mutation version AS OF and
         # compare against the un-mutated baseline
         "timetravel": rng.random() < 0.35,
@@ -900,10 +896,7 @@ def run_storage(n_seeds: int, sf: str, spark=None) -> list[int]:
             )
             old_eqb = os.environ.get("SPARK_GRAFT_EQ_INLINE_BUDGET")
             old_eqs = os.environ.get("SPARK_GRAFT_EQ_SHIP_CAP")
-            old_fmt = os.environ.get("SPARK_GRAFT_SEGMENT_FORMAT")
-            if prog["seg_format"] is not None:
-                os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = "json"
-            if prog["shard"]:
+            if prog["small_segs"]:
                 os.environ["SPARK_GRAFT_MANIFEST_SEGMENT_FILES"] = "3"
                 if prog["group"]:
                     os.environ["SPARK_GRAFT_MANIFEST_SEGMENTS_PER_GROUP"] = "2"
@@ -923,17 +916,6 @@ def run_storage(n_seeds: int, sf: str, spark=None) -> list[int]:
                     S.commit_append(
                         full.filter(f"event_id % {k} = {i}"), t
                     )
-                # segment-format axis: "mixed" flips later commits back
-                # to parquet; "convert" migrates the json build in place
-                # — both BEFORE evolution/DML so the whole downstream
-                # program runs over the straddled/converted layout
-                if prog["seg_format"] in ("mixed", "convert"):
-                    if old_fmt is None:
-                        os.environ.pop("SPARK_GRAFT_SEGMENT_FORMAT", None)
-                    else:
-                        os.environ["SPARK_GRAFT_SEGMENT_FORMAT"] = old_fmt
-                    if prog["seg_format"] == "convert":
-                        S.convert_segment_format(t)
                 # --- evolution: mapping commits, final schema unchanged ---
                 from web_analytics_on_aws_spark.sources import evolution as E
 
@@ -1155,7 +1137,6 @@ def run_storage(n_seeds: int, sf: str, spark=None) -> list[int]:
                     ("SPARK_GRAFT_MANIFEST_SEGMENTS_PER_GROUP", old_genv),
                     ("SPARK_GRAFT_EQ_INLINE_BUDGET", old_eqb),
                     ("SPARK_GRAFT_EQ_SHIP_CAP", old_eqs),
-                    ("SPARK_GRAFT_SEGMENT_FORMAT", old_fmt),
                 ):
                     if old is None:
                         os.environ.pop(var, None)

@@ -165,8 +165,6 @@ def _snapshot_cmd(args) -> int:
         ... snapshot <path> compact-deletes
         ... snapshot <path> tag|drop-tag|branch|drop-branch|fast-forward <name>
         ... snapshot <path> clone|drop-clone <dst-path>
-        ... snapshot <path> upgrade-manifest
-        ... snapshot <path> convert-segments [parquet|json]
         ... snapshot <path> read-ref <name>
         ... snapshot <path> wap-publish|wap-discard <wap-id>
         ... snapshot <path> partition-spec [src:transform,... | none]
@@ -243,15 +241,6 @@ def _snapshot_cmd(args) -> int:
             elif sub == "drop-clone":
                 print({"dropped_clone": args.arg3,
                        "markers_removed": refs.drop_clone(path, args.arg3)})
-            return 0
-        if sub == "upgrade-manifest":
-            # metadata-only backfill (round 10) — no Spark session needed
-            print(snapshots.upgrade_manifest(path))
-            return 0
-        if sub == "convert-segments":
-            # metadata-only format rewrite (round 12) — no Spark needed;
-            # optional third arg picks the target (parquet | json)
-            print(snapshots.convert_segment_format(path, args.arg3))
             return 0
         spark = get_spark(app_name="snapshot-cli")
         spark.sparkContext.setLogLevel("ERROR")

@@ -637,16 +637,11 @@ def _est_row_bytes(df: DataFrame, table: str) -> float:
         cur = current_version(table)
         if cur is not None:
             head = _read_manifest_head(table, cur)
-            if "segments" in head or "groups" in head:
-                # sharded manifest: the head's group + segment summaries
-                # carry row/byte totals — O(head), never hydrate for sizing
-                summ = head.get("groups", []) + head.get("segments", [])
-                rows = sum(int(s.get("rows", 0)) for s in summ)
-                size = sum(int(s.get("bytes", 0)) for s in summ)
-            else:
-                fs = head.get("file_stats", {})
-                rows = sum(int(e.get("rows", 0)) for e in fs.values())
-                size = sum(int(e.get("bytes", 0)) for e in fs.values())
+            # the head's group + segment summaries carry row/byte totals —
+            # O(head), never hydrate for sizing
+            summ = head.get("groups", []) + head.get("segments", [])
+            rows = sum(int(s.get("rows", 0)) for s in summ)
+            size = sum(int(s.get("bytes", 0)) for s in summ)
             if rows > 1000:  # enough history to trust the ratio
                 return max(1.0, size / rows)
     except Exception:

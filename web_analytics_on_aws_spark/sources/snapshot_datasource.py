@@ -120,8 +120,8 @@ def planned_files(parts: list) -> list[_FilePartition]:
 
 
 def _resolve_head(options: dict) -> dict:
-    """The pinned version's manifest HEAD — raw, segments un-hydrated (on
-    a sharded manifest the head is O(segments), never O(files))."""
+    """The pinned version's manifest HEAD — raw, segments un-hydrated (the
+    head is O(segments), never O(files))."""
     table = options["path"]
     cur = current_version(table)
     if cur is None:
@@ -202,7 +202,7 @@ def _unified_arrow_schema(files: list[str], m: dict | None = None):
 
 
 def _segments_arrow_schema(head: dict):
-    """Union arrow schema of an UNMAPPED sharded table resolved from the
+    """Union arrow schema of an UNMAPPED table resolved from the
     head's segment summaries alone (each records its members' merged
     column types — snapshots._summarize_segment): O(segments), zero
     segment opens, zero footer reads. Returns None when any segment
@@ -517,11 +517,6 @@ class SnapshotReader(DataSourceReader):
         self._table = table
         head = _resolve_head(options)
         self._head = head
-        from web_analytics_on_aws_spark.sources.snapshots import (
-            _is_sharded,
-        )
-
-        self._segmented = _is_sharded(head)
         self._schema = schema
         self._pushed: list[Filter] = []
         self._target_bytes = int(
@@ -531,15 +526,15 @@ class SnapshotReader(DataSourceReader):
         # outstanding equality deletes (upsert_keys_mor / delete_keys_mor):
         # the entry list is head metadata (bounded by maintenance — the
         # reference pins optimize_rewrite_delete_file_threshold='10');
-        # per-file commit sequences resolve lazily (inline heads carry
-        # file_seq; sharded heads fill _seqs from the predicate-surviving
-        # segments in _plan_files — never a manifest-wide hydration)
+        # per-file commit sequences resolve lazily (_plan_files fills _seqs
+        # from the predicate-surviving segments — never a manifest-wide
+        # hydration)
         from web_analytics_on_aws_spark.sources.snapshots import (
             _manifest_eq_deletes,
         )
 
         self._eq = _manifest_eq_deletes(head)
-        self._seqs = head.get("file_seq", {})
+        self._seqs: dict = {}
         # hidden partitioning (sources/partitioning.py): the spec registry
         # rides the head; per-file tuples ride the segments
         self._specs = (head.get("partitioning") or {}).get("specs", {})
@@ -551,14 +546,12 @@ class SnapshotReader(DataSourceReader):
         self._map = (
             {f["name"]: f["phys"] for f in sch["fields"]} if sch else {}
         )
-        # per-file partition tuples + manifest column stats: inline
-        # manifests carry them in the head; sharded manifests fill them in
+        # per-file partition tuples + manifest column stats: filled in
         # partitions() from the PREDICATE-SURVIVING segments only — the
         # whole point of the manifest-list split is that planning never
         # materializes the full per-file maps
-        self._parts = head.get("file_partitions", {})
-        self._stats = head.get("file_stats", {})
-        self._files = head.get("files", [])
+        self._parts: dict = {}
+        self._stats: dict = {}
         # planning telemetry for probes/tests: how much manifest metadata
         # this read actually parsed (segments_read < segments_total under
         # a selective predicate is the manifest-level skip working)
@@ -587,19 +580,15 @@ class SnapshotReader(DataSourceReader):
                 want = to_arrow_schema(schema)
             except Exception:
                 want = None
-        if want is None and self._segmented and sch is None:
-            # unmapped sharded table: the head's segment summaries carry
-            # merged member types — O(segments), no hydration
+        if want is None and sch is None:
+            # unmapped table: the head's segment summaries carry merged
+            # member types — O(segments), no hydration
             want = _segments_arrow_schema(head)
         if want is None:
-            # no usable engine-provided schema and no summary types (pre-
-            # types segments / mixed physical types): fall back to the
-            # manifest union — hydrates on unmapped sharded tables
-            m = (
-                _hydrate_manifest(table, head)
-                if self._segmented and sch is None
-                else head
-            )
+            # no usable engine-provided schema and no summary types (ns
+            # timestamps / mixed physical types): fall back to the
+            # manifest union — hydrates on unmapped tables
+            m = _hydrate_manifest(table, head) if sch is None else head
             want, _ = _mapped_arrow_schema(m)
         self._want = want
 
@@ -733,11 +722,9 @@ class SnapshotReader(DataSourceReader):
 
     def _plan_files(self) -> list[str]:
         """The candidate file list for this read, hydrating only the
-        predicate-intersecting segments on sharded manifests (and filling
-        ``self._parts`` / ``self._stats`` for the per-file checks).
-        Records ``plan_stats`` for probes."""
-        if not self._segmented:
-            return self._files
+        predicate-intersecting segments (and filling ``self._parts`` /
+        ``self._stats`` for the per-file checks). Records ``plan_stats``
+        for probes."""
         from web_analytics_on_aws_spark.sources.snapshots import (
             _REMOTE_SCHEMES,
             _manifest_path,
@@ -917,14 +904,8 @@ class SnapshotReader(DataSourceReader):
             d["_seqs"] = {}
             d["_deletes"] = {}
             d["_bloom"] = {}
-            d["_files"] = []
             d["_head"] = {}
             d["_eq"] = []
-        elif self._segmented:
-            # sharded manifests rebuild these inside partitions() anyway
-            d["_parts"] = {}
-            d["_stats"] = {}
-            d["_seqs"] = {}
         return d
 
     def read(self, partition: _ScanPartition) -> Iterator:
@@ -1021,25 +1002,20 @@ class SnapshotDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        # mapped tables resolve from the head's schema block alone (O(1)
-        # on sharded manifests); unmapped SHARDED tables resolve from the
-        # segment summaries' merged types (O(segments), VERDICT r8 #2) —
-        # hydration of the file maps is the last-resort fallback for
-        # pre-types segments or mixed physical types
-        from web_analytics_on_aws_spark.sources.snapshots import (
-            _is_sharded,
-        )
-
+        # mapped tables resolve from the head's schema block alone (O(1));
+        # unmapped tables resolve from the segment summaries' merged types
+        # (O(segments), VERDICT r8 #2) — hydration of the file maps is the
+        # last-resort fallback for ns timestamps or mixed physical types
         head = _resolve_head(self.options)
         full = None
-        if head.get("schema") is None and _is_sharded(head):
+        if head.get("schema") is None:
             arrow = _segments_arrow_schema(head)
             if arrow is not None:
                 full = from_arrow_schema(arrow)
         if full is None:
             m = (
                 head
-                if head.get("schema") is not None or not _is_sharded(head)
+                if head.get("schema") is not None
                 else _hydrate_manifest(self.options["path"], head)
             )
             arrow, _ = _mapped_arrow_schema(m)

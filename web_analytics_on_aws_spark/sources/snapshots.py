@@ -1,5 +1,5 @@
 """Minimal snapshot table format: atomic commits, time travel, vacuum —
-plain-parquet + JSON manifests, no table-format jars.
+plain-parquet data files + a two-level manifest, no table-format jars.
 
 The reference's iceberg variants delegate exactly these semantics to
 AWS-managed Iceberg (S9/S12 in SURVEY §2.1: atomic micro-batch commits,
@@ -8,7 +8,11 @@ re-creates the *mechanism* so the engine has real table semantics on any
 filesystem:
 
 - data files are immutable parquet parts under ``data/``; a **manifest**
-  (``vN.json``) lists the exact file set of snapshot N;
+  names the exact file set of snapshot N. It has one layout at every
+  table size: a JSON head (``vN.json``: schema, specs, txns, delete
+  sidecars, segment summaries) over immutable columnar segment files
+  (``manifests/segs/*.parquet``, one row per data file) — Iceberg's
+  manifest list over manifest files;
 - a commit writes new data files, then publishes the next manifest via
   write-temp + ``os.replace`` — atomic on POSIX, so readers always see a
   complete snapshot (never a half-written file list);
@@ -73,11 +77,11 @@ def current_version(table: str) -> int | None:
 
 
 def _read_manifest_head(table: str, version: int) -> dict:
-    """The manifest HEAD document alone — on a sharded manifest (format 2)
-    this is the manifest-list: table metadata (schema, specs, sort order,
-    constraints, txns, delete sidecars) plus bounded ``segments`` entries,
-    never the per-file maps. Head-only consumers (sort order, constraints,
-    txn stamps, commit times) stay O(1) regardless of file count."""
+    """The manifest HEAD document alone — the manifest-list: table
+    metadata (schema, specs, sort order, constraints, txns, delete
+    sidecars) plus bounded ``segments`` entries, never the per-file maps.
+    Head-only consumers (sort order, constraints, txn stamps, commit
+    times) stay O(1) regardless of file count."""
     with open(_manifest_path(table, version)) as f:
         return json.load(f)
 
@@ -91,121 +95,83 @@ def _segment_abspath(table: str, rel: str) -> str:
     return os.path.join(table, MANIFEST_DIR, rel)
 
 
-def _segment_format() -> str:
-    """File format for NEW manifest segment writes: ``parquet``
-    (columnar, the default) or ``json`` (the legacy format).
-    ``SPARK_GRAFT_SEGMENT_FORMAT`` selects. Reads always dispatch on the
-    segment file's extension, so mixed-format tables — and zero-copy
-    forks that straddle the format change — read seamlessly; the head's
-    summaries are format-neutral (they store the member path verbatim).
-
-    Why columnar (the r9/r10-documented next tier, Iceberg's own Avro
-    manifest rationale): the 10M-file vacuum was bounded by ONE
-    stdlib-JSON parse of 2.76 GB of segment text (399 s, SCALE.md r10).
-    A columnar segment lets the vacuum live-set fold read the
-    dictionary-encoded ``path`` column alone — no byte of per-file
-    stats is even decompressed — and zstd+dictionary shrinks the bytes
-    on disk several-fold on top."""
-    fmt = os.environ.get("SPARK_GRAFT_SEGMENT_FORMAT", "parquet").lower()
-    if fmt not in ("parquet", "json"):
-        raise ValueError(
-            f"SPARK_GRAFT_SEGMENT_FORMAT={fmt!r}: use 'parquet' or 'json'"
-        )
-    return fmt
-
-
 def _read_segment(table: str, rel: str) -> dict:
     """One manifest segment: ``{"entries": {path: {"seq", "part"?,
     "stats"?}}}`` — an immutable, bounded slice of the version's file set
     (written once by ``_segmentize``, shared by reference across every
-    later version that carries its files unchanged). Dispatches on the
-    file extension: columnar (parquet) segments hold one row per member
-    with ``part``/``stats`` as compact-JSON string columns (null = key
-    absent), reconstructed here to the exact legacy entry shape."""
-    ap = _segment_abspath(table, rel)
-    if rel.endswith(".parquet"):
-        import pyarrow.parquet as pq
+    later version that carries its files unchanged). The columnar file
+    holds one row per member with ``part``/``stats`` as compact-JSON
+    string columns (null = key absent), reconstructed here to the entry
+    shape."""
+    import pyarrow.parquet as pq
 
-        # use_threads=False: a bounded segment is a few thousand rows —
-        # read_table's default per-call thread-pool spin costs ~3 ms
-        # against a ~0.3 ms single-threaded read (measured 13× on
-        # 100-entry segments); callers that fan out (the vacuum pool,
-        # planning's survivor loop) supply the parallelism themselves
-        cols = pq.ParquetFile(ap).read(use_threads=False).to_pydict()
-        # decode each JSON-string column as ONE synthesized array parse —
-        # a single C-level json.loads call instead of one per row
-        # (measured 1.5× on a 5k-member segment; nulls ride as literal
-        # JSON nulls and map back to absent keys below)
-        parts = (
-            json.loads(
-                "[%s]"
-                % ",".join(
-                    p if p is not None else "null" for p in cols["part"]
-                )
-            )
-            if cols["part"]
-            else []
+    # use_threads=False: a bounded segment is a few thousand rows —
+    # read_table's default per-call thread-pool spin costs ~3 ms against a
+    # ~0.3 ms single-threaded read (measured 13× on 100-entry segments);
+    # callers that fan out (the vacuum pool, planning's survivor loop)
+    # supply the parallelism themselves
+    cols = (
+        pq.ParquetFile(_segment_abspath(table, rel))
+        .read(use_threads=False)
+        .to_pydict()
+    )
+    # decode each JSON-string column as ONE synthesized array parse — a
+    # single C-level json.loads call instead of one per row (measured 1.5×
+    # on a 5k-member segment; nulls ride as literal JSON nulls and map
+    # back to absent keys below)
+    parts = (
+        json.loads(
+            "[%s]"
+            % ",".join(p if p is not None else "null" for p in cols["part"])
         )
-        stats = (
-            json.loads(
-                "[%s]"
-                % ",".join(
-                    s if s is not None else "null" for s in cols["stats"]
-                )
-            )
-            if cols["stats"]
-            else []
+        if cols["part"]
+        else []
+    )
+    stats = (
+        json.loads(
+            "[%s]"
+            % ",".join(s if s is not None else "null" for s in cols["stats"])
         )
-        entries: dict[str, dict] = {}
-        for p, sq, pt, st in zip(cols["path"], cols["seq"], parts, stats):
-            e: dict = {"seq": sq}
-            if pt is not None:
-                e["part"] = pt
-            if st is not None:
-                e["stats"] = st
-            entries[p] = e
-        return {"entries": entries}
-    with open(ap) as f:
-        return json.load(f)
+        if cols["stats"]
+        else []
+    )
+    entries: dict[str, dict] = {}
+    for p, sq, pt, st in zip(cols["path"], cols["seq"], parts, stats):
+        e: dict = {"seq": sq}
+        if pt is not None:
+            e["part"] = pt
+        if st is not None:
+            e["stats"] = st
+        entries[p] = e
+    return {"entries": entries}
 
 
 def _segment_entry_paths(table: str, rel: str) -> list[str]:
     """Member PATHS of one segment — all the vacuum live-set fold needs.
-    Columnar segments read the ``path`` column alone (the stats/part
-    strings are never even decompressed, let alone JSON-decoded — this
-    is the 100 TB win of the columnar format; see ``_segment_format``);
-    JSON segments fall back to the full parse."""
-    if rel.endswith(".parquet"):
-        import pyarrow.parquet as pq
+    Reads the ``path`` column alone: the stats/part strings are never even
+    decompressed, let alone JSON-decoded (the 10M-file vacuum was once
+    bounded by one stdlib-JSON parse of 2.76 GB of segment text, SCALE.md
+    r10)."""
+    import pyarrow.parquet as pq
 
-        return (
-            pq.ParquetFile(_segment_abspath(table, rel))
-            .read(columns=["path"], use_threads=False)
-            .column("path")
-            .to_pylist()
-        )
-    return list(_read_segment(table, rel)["entries"])
+    return (
+        pq.ParquetFile(_segment_abspath(table, rel))
+        .read(columns=["path"], use_threads=False)
+        .column("path")
+        .to_pylist()
+    )
 
 
-def _write_segment_entries(
-    table: str, entries: dict[str, dict], fmt: str | None = None
-) -> str:
-    """Write one immutable segment file in ``fmt`` (default: the
-    configured ``_segment_format``) and return its relative path. The
-    columnar layout is one row per member — ``path`` (dict-encoded),
-    ``seq``, and ``part``/``stats`` as compact-JSON strings (null when
-    the entry lacks the key; entry values are JSON-native by
-    construction, so the string hop round-trips exactly)."""
-    segdir = os.path.join(table, MANIFEST_DIR, SEGS_SUBDIR)
-    os.makedirs(segdir, exist_ok=True)
-    if (fmt or _segment_format()) == "json":
-        rel = os.path.join(SEGS_SUBDIR, f"seg-{uuid.uuid4().hex[:16]}.json")
-        with open(_segment_abspath(table, rel), "w") as f:
-            json.dump({"entries": entries}, f)
-        return rel
+def _write_segment_entries(table: str, entries: dict[str, dict]) -> str:
+    """Write one immutable columnar segment file and return its relative
+    path. One row per member — ``path`` (dict-encoded), ``seq``, and
+    ``part``/``stats`` as compact-JSON strings (null when the entry lacks
+    the key; entry values are JSON-native by construction, so the string
+    hop round-trips exactly)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    os.makedirs(os.path.join(table, MANIFEST_DIR, SEGS_SUBDIR), exist_ok=True)
     dump = json.dumps
     paths, seqs, parts, stats = [], [], [], []
     for p, e in entries.items():
@@ -253,13 +219,6 @@ def _read_segments(table: str, segs: list[dict]) -> list[dict]:
                 lambda s: _read_segment(table, s["path"])["entries"], segs
             )
         )
-
-
-def _is_sharded(head: dict) -> bool:
-    """Sharded (format-2) head? The inline tail may legitimately be empty
-    once every segment has been spilled into groups, so shardedness is
-    'either layer present', never a truthiness check on ``segments``."""
-    return "segments" in head or "groups" in head
 
 
 def _read_group(table: str, rel: str) -> list[dict]:
@@ -323,14 +282,11 @@ def _effective_segments(table: str, head: dict) -> list[dict]:
 
 
 def _hydrate_manifest(table: str, m: dict) -> dict:
-    """Materialize a sharded head into the legacy logical manifest shape
-    (``files`` / ``file_seq`` / ``file_partitions`` / ``file_stats``) so
-    every existing consumer keeps working. Inline (format-1) manifests
-    pass through untouched. Planning hot paths that only need the
+    """Materialize a head into the logical manifest shape (``files`` /
+    ``file_seq`` / ``file_partitions`` / ``file_stats``) by folding every
+    segment it references. Planning hot paths that only need the
     predicate-intersecting slice use the head + per-segment summaries
     directly (SnapshotReader) instead of this full fold."""
-    if not _is_sharded(m):
-        return m
     files: list[str] = []
     seqs: dict[str, int] = {}
     fp: dict[str, dict] = {}
@@ -358,14 +314,8 @@ def _read_manifest(table: str, version: int) -> dict:
 
 
 def _manifest_txns(m: dict) -> dict[str, int]:
-    """Per-app txn stamps recorded in a manifest (legacy single-``txn``
-    manifests normalize to a one-entry map)."""
-    txns = {a: int(b) for a, b in m.get("txns", {}).items()}
-    legacy = m.get("txn")
-    if legacy:
-        app, batch = legacy["app"], int(legacy["batch"])
-        txns[app] = max(txns.get(app, batch), batch)
-    return txns
+    """Per-app txn stamps recorded in a manifest."""
+    return {a: int(b) for a, b in m.get("txns", {}).items()}
 
 
 def _manifest_deletes(m: dict) -> list[str]:
@@ -429,13 +379,13 @@ def _publish(
     """Publish snapshot ``version``.
 
     ``new_files``/``removed_files`` describe the commit as a DELTA over
-    the predecessor. When the predecessor is SHARDED and the delta is
-    given, the publish is O(delta): no hydration of the full per-file
-    maps, untouched segments re-listed sight-unseen (their recorded path
-    ranges prove they hold no removed/re-stamped file), and only
-    new/changed files get fresh segments. ``files=None`` is allowed in
-    exactly that mode (the full list lives in the segments; nobody needs
-    it materialized) — the commit path of a 1M-file table then reads and
+    the predecessor. When a predecessor exists and the delta is given,
+    the publish is O(delta): no hydration of the full per-file maps,
+    untouched segments re-listed sight-unseen (their recorded path ranges
+    prove they hold no removed/re-stamped file), and only new/changed
+    files get fresh segments. ``files=None`` is allowed in exactly that
+    mode (the full list lives in the segments; nobody needs it
+    materialized) — the commit path of a 1M-file table then reads and
     writes O(changed) metadata, the VERDICT r7 #1 scale contract."""
     os.makedirs(os.path.join(table, MANIFEST_DIR), exist_ok=True)
     body = {
@@ -479,19 +429,17 @@ def _publish(
             vs = [v for v in _versions(table) if v < version]
             if vs:
                 prev_raw = _read_manifest_head(table, vs[-1])
-    # DELTA mode: sharded predecessor + caller-described delta → never
+    # DELTA mode: predecessor + caller-described delta → never
     # materialize the predecessor's per-file maps (O(delta) publish).
     lazy = (
         prev_raw is not None
-        and _is_sharded(prev_raw)
         and new_files is not None
         and removed_files is not None
-        and (files is None or len(files) > _segment_target())
     )
     if files is None and not lazy:
         raise ValueError(
-            "_publish: files=None requires a sharded predecessor and an "
-            "explicit new_files/removed_files delta"
+            "_publish: files=None requires a predecessor and an explicit "
+            "new_files/removed_files delta"
         )
     if prev_raw is not None:
         prev = prev_raw if lazy else _hydrate_manifest(table, prev_raw)
@@ -562,17 +510,17 @@ def _publish(
         body["constraints"] = dict(constraints)  # replace (set_constraints)
     elif prev_constraints:
         body["constraints"] = prev_constraints
-    # Sharded manifests (VERDICT r7 #1): past the inline threshold the
-    # per-file maps move out of the head into bounded, immutable segment
-    # files — commits re-reference untouched segments (O(changed files)
-    # manifest I/O per commit) and planning reads only the segments whose
-    # recorded ranges intersect the pushed predicate (SnapshotReader).
+    # Sharded manifests (VERDICT r7 #1): the per-file maps live outside
+    # the head in bounded, immutable segment files — commits re-reference
+    # untouched segments (O(changed files) manifest I/O per commit) and
+    # planning reads only the segments whose recorded ranges intersect the
+    # pushed predicate (SnapshotReader).
     if lazy:
         body = _segmentize_delta(
             table, body, prev_raw, new_files, removed_files,
             override, file_partitions or {}, file_stats or {}, version,
         )
-    elif len(files) > _segment_target():
+    else:
         # the commit's DIRTY set: files removed by this commit plus files
         # whose per-file metadata an explicit override actually changes —
         # everything else is carried verbatim by construction, so
@@ -624,18 +572,17 @@ def _publish_raw(table: str, version: int, body: dict) -> None:
 #   constraints, txns, MOR sidecar lists) plus a ``segments`` list — one
 #   entry per segment file with its file count, byte/row totals, merged
 #   column bounds and partition-value sets (the manifest-level ranges);
-# - each segment (manifests/segs/seg-*.parquet — columnar, the default
-#   since round 12; legacy seg-*.json reads forever) carries ≤ target
-#   per-file entries ({seq, partition tuple, column stats}), grouped by
-#   partition tuple at write time so segment ranges stay tight;
+# - each segment (a columnar parquet file under manifests/segs/) carries
+#   ≤ target per-file entries ({seq, partition tuple, column stats}),
+#   grouped by partition tuple at write time so segment ranges stay tight;
 # - segments are IMMUTABLE and carried BY REFERENCE: a commit re-lists
 #   the untouched segments' paths verbatim and writes new segments only
 #   for new/changed files — a 1-file append touches O(1) segments;
 # - scan planning (SnapshotReader) checks the pushed predicate against
 #   each segment's recorded ranges and opens only the intersecting
 #   segments — manifest-level skipping, one layer above per-file skip;
-# - tables at or under the threshold keep the inline format (human-
-#   readable, zero extra files), and every reader accepts both.
+# - every table, from an empty one up, uses this one layout, so readers
+#   and writers have a single code path.
 #
 # Orphaned segments (lost CAS races) and segments referenced only by
 # expired versions are GC'd by vacuum, same contract as data files.
@@ -645,12 +592,15 @@ _SEG_TARGET_DEFAULT = 100
 
 
 def _segment_target() -> int:
-    """Files per manifest segment (and the inline-format threshold).
-    ``SPARK_GRAFT_MANIFEST_SEGMENT_FILES`` tunes it; 0 disables sharding
-    (always inline)."""
+    """Files per manifest segment. ``SPARK_GRAFT_MANIFEST_SEGMENT_FILES``
+    tunes it; it must be positive."""
     env = os.environ.get("SPARK_GRAFT_MANIFEST_SEGMENT_FILES")
     n = int(env) if env else _SEG_TARGET_DEFAULT
-    return n if n > 0 else (1 << 62)
+    if n <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_MANIFEST_SEGMENT_FILES={env!r}: must be positive"
+        )
+    return n
 
 
 def _dec_stat(v):
@@ -981,12 +931,7 @@ def _segmentize(
     # segment that fails verification below. Carried files NOT in a
     # dropped segment are, by the partition property of segments, inside
     # a reused one — no member lists needed for the sight-unseen path.
-    # An INLINE predecessor has no segments at all: every file is loose
-    # (the one-time transition commit materializes the full split).
-    if prev_raw is not None and _is_sharded(prev_raw):
-        loose = [f for f in files if f not in prev_files]
-    else:
-        loose = list(files)
+    loose = [f for f in files if f not in prev_files]
 
     def _entries(seg: dict) -> dict:
         try:
@@ -1565,13 +1510,11 @@ def _write_data_files(df: DataFrame, table: str) -> list[str]:
 def last_committed_batch(table: str, app: str) -> int | None:
     """Highest micro-batch id committed by ``app`` (Delta's txn-appId
     idempotence protocol). The head manifest carries the complete per-app
-    map (see ``_publish``), so one read answers it even after vacuum; the
-    newest-first scan below only matters for pre-``txns`` legacy tables."""
-    for v in reversed(_versions(table)):
-        txns = _manifest_txns(_read_manifest_head(table, v))
-        if app in txns:
-            return txns[app]
-    return None
+    map (see ``_publish``), so one read answers it even after vacuum."""
+    cur = current_version(table)
+    if cur is None:
+        return None
+    return _manifest_txns(_read_manifest_head(table, cur)).get(app)
 
 
 def commit_append(
@@ -1649,14 +1592,10 @@ def commit_append(
         # publishing on top of it (no-op when unchanged)
         _validate(prev_m.get("constraints", {}))
         version = (cur or 0) + 1
-        # sharded predecessor: publish the DELTA (files=None) — the full
-        # file list lives in the segments and is never materialized here;
-        # inline predecessor: the head IS the full manifest, list from it
-        files_arg = (
-            None
-            if _is_sharded(prev_m)
-            else prev_m.get("files", []) + new_files
-        )
+        # publish the DELTA (files=None) — the full file list lives in the
+        # segments and is never materialized here; the first commit has
+        # no predecessor, so its new files ARE the full list
+        files_arg = None if cur is not None else new_files
         try:
             # appends never touch existing files → outstanding MOR delete
             # sidecars carry forward unchanged (the new files' HIGHER
@@ -1933,11 +1872,8 @@ def history(table: str) -> list[dict]:
     out = []
     for v in _versions(table):
         m = _read_manifest_head(table, v)
-        n = (
-            sum(int(s["n"]) for s in m.get("groups", []))
-            + sum(int(s["n"]) for s in m.get("segments", []))
-            if _is_sharded(m)
-            else len(m["files"])
+        n = sum(int(s["n"]) for s in m.get("groups", [])) + sum(
+            int(s["n"]) for s in m.get("segments", [])
         )
         out.append(
             {k: m[k] for k in ("version", "operation")} | {"n_files": n}
@@ -1985,15 +1921,12 @@ def _live_refs(
         m = _read_manifest_head(table, v)
         files.update(_manifest_deletes(m))
         files.update(e["path"] for e in _manifest_eq_deletes(m))
-        if _is_sharded(m):
-            for g in m.get("groups", []):
-                ap = os.path.abspath(_segment_abspath(table, g["path"]))
-                groups.setdefault(ap, g["path"])
-            for seg in m.get("segments", []):
-                ap = os.path.abspath(_segment_abspath(table, seg["path"]))
-                pending.setdefault(ap, seg["path"])
-        else:
-            files.update(m.get("files", []))
+        for g in m.get("groups", []):
+            ap = os.path.abspath(_segment_abspath(table, g["path"]))
+            groups.setdefault(ap, g["path"])
+        for seg in m.get("segments", []):
+            ap = os.path.abspath(_segment_abspath(table, seg["path"]))
+            pending.setdefault(ap, seg["path"])
     # each distinct GROUP read once — its member segments join the pool
     # (groups are shared across versions by the reuse design, exactly
     # like segments, so this stays O(heads + distinct groups + distinct
@@ -2612,27 +2545,24 @@ def _table_columns(spark: SparkSession, m: dict) -> list[str]:
 
 def _probe_file_with_rows(table: str, m: dict) -> str | None:
     """One data file that provably holds rows — for the MOR commit-time
-    path-roundtrip probe. On a sharded manifest the segment summaries
-    point straight at one (zero footer opens); otherwise walk footers."""
+    path-roundtrip probe. The segment summaries point straight at one
+    (zero footer opens); stats-less members fall back to a footer walk."""
     import pyarrow.parquet as pq
 
-    if _is_sharded(m):
-        # descend rows>0 summaries only: group → segment → file, opening
-        # one group and one segment in the common case
-        segs = list(m.get("segments", []))
-        for g in m.get("groups", []):
-            if int(g.get("rows", 0)) > 0:
-                segs.extend(_read_group(table, g["path"]))
-                break
-        for seg in segs:
-            if int(seg.get("rows", 0)) > 0:
-                for p, e in _read_segment(table, seg["path"])[
-                    "entries"
-                ].items():
-                    st = e.get("stats")
-                    if st and int(st.get("rows", 0)) > 0:
-                        return p
-        m = _hydrate_manifest(table, m)  # stats-less members — rare
+    # descend rows>0 summaries only: group → segment → file, opening one
+    # group and one segment in the common case
+    segs = list(m.get("segments", []))
+    for g in m.get("groups", []):
+        if int(g.get("rows", 0)) > 0:
+            segs.extend(_read_group(table, g["path"]))
+            break
+    for seg in segs:
+        if int(seg.get("rows", 0)) > 0:
+            for p, e in _read_segment(table, seg["path"])["entries"].items():
+                st = e.get("stats")
+                if st and int(st.get("rows", 0)) > 0:
+                    return p
+    m = _hydrate_manifest(table, m)  # stats-less members — rare
     return next(
         (
             f
@@ -2694,12 +2624,12 @@ def delete_keys_mor(
             return {"version": cur, "operation": "delete-keys", "replayed": True}
     # head first: a MAPPED table's delete-keys commit never needs the
     # per-file maps (key checks resolve from the schema block, the probe
-    # from segment summaries) — O(head) on sharded manifests. Unmapped
-    # tables still hydrate for the union-schema column check.
+    # from segment summaries) — O(head). Unmapped tables still hydrate for
+    # the union-schema column check.
     head = _read_manifest_head(table, cur)
     m = (
         head
-        if head.get("schema") is not None and _is_sharded(head)
+        if head.get("schema") is not None
         else _hydrate_manifest(table, head)
     )
     if m.get("schema") is not None:
@@ -2731,7 +2661,7 @@ def delete_keys_mor(
         {"path": p, "keys": key_cols, "seq": version} for p in sidecars
     ]
     _publish(
-        table, version, m.get("files"), "delete-keys", txn=txn,
+        table, version, None, "delete-keys", txn=txn,
         delete_files=_manifest_deletes(m), eq_deletes=entries,
         new_files=[], removed_files=[],
     )
@@ -2786,15 +2716,11 @@ def upsert_keys_mor(
         n_src = src.count()
         if src.select(*keys).distinct().count() != n_src:
             raise ValueError(f"upsert source is not unique on {keys}")
-        # the streaming hot path: a MAPPED sharded table never hydrates —
+        # the streaming hot path: a MAPPED table never hydrates —
         # schema/spec/sort checks are head-only, the roundtrip probe is
         # summary-guided, and the publish is a pure delta (O(|batch|)
         # metadata per trigger regardless of table size)
-        m = (
-            head
-            if sch is not None and _is_sharded(head)
-            else _hydrate_manifest(table, head)
-        )
+        m = head if sch is not None else _hydrate_manifest(table, head)
         # same column contract as merge_into (review r3 finding): the
         # source must carry the table's columns; extras are dropped —
         # mode="mor" and mode="cow" streams produce the same table schema.
@@ -2845,9 +2771,7 @@ def upsert_keys_mor(
             {"path": p, "keys": list(keys), "seq": version} for p in sidecars
         ]
         _publish(
-            table, version,
-            (m["files"] + data_files) if "files" in m else None,
-            "upsert-keys", txn=txn,
+            table, version, None, "upsert-keys", txn=txn,
             delete_files=_manifest_deletes(m), eq_deletes=entries,
             file_partitions=fparts,
             file_stats=collect_file_stats(data_files, spark),
@@ -2974,210 +2898,6 @@ def restore_version(spark: SparkSession, table: str, version: int) -> int:
         sort_order=target.get("sort_order"),
     )
     return new_version
-
-
-def upgrade_manifest(table: str) -> dict:
-    """Backfill the O(head) union-schema metadata onto a sharded table
-    created before the ``types`` summaries existed (VERDICT r9 #4): such
-    a table silently fell back to full manifest hydration on EVERY schema
-    resolve of an unmapped read, forever — the summaries are recomputed
-    only when a commit dirties their segment, which a read-mostly table
-    never does. One metadata commit fixes it in place:
-
-    - a segment summary without a merged ``types`` block is recomputed
-      from its (immutable) segment file's entries — ZERO data-file reads
-      when the entries already carry per-file types (any table written
-      since the entry-level stats era);
-    - a LEGACY segment whose entries predate per-file types is re-stamped
-      from each member's parquet FOOTER (schema-only) and rewritten as a
-      NEW immutable segment file — the original stays referenced by older
-      versions/forks and is GC'd by vacuum once unreferenced;
-    - groups whose summary already carries types ride by reference; a
-      group opened because it lacks one is re-listed VERBATIM when none
-      of its members change, so idempotent re-runs publish nothing.
-
-    Inline (non-sharded) manifests hydrate O(files-in-head) by
-    construction — no-op. Returns counters + the published version."""
-    cur = current_version(table)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    head = _read_manifest_head(table, cur)
-    res = {
-        "upgraded": False,
-        "segments_resummarized": 0,
-        "segments_rewritten": 0,
-        "footer_reads": 0,
-        "version": cur,
-    }
-    if not _is_sharded(head):
-        return res
-
-    def _upgrade_summary(s: dict) -> tuple[dict, bool]:
-        if s.get("types"):
-            return dict(s), False
-        rel = s["path"]
-        entries = {
-            p: dict(e) for p, e in _read_segment(table, rel)["entries"].items()
-        }
-        # a member with NO stats at all can never contribute types (the
-        # every-member-or-nothing rule) — don't burn footer reads on a
-        # segment that cannot gain a block
-        if any(not e.get("stats") for e in entries.values()):
-            return dict(s), False
-        stamped = False
-        for p, e in entries.items():
-            st = e["stats"]
-            if st.get("types"):
-                continue
-            t = _file_types(p)
-            res["footer_reads"] += 1
-            if t is None:
-                return dict(s), False  # unconvertible member — leave as-is
-            e["stats"] = dict(st) | {"types": t}
-            stamped = True
-        if stamped:
-            # entries changed → NEW immutable segment file; the original
-            # keeps serving older versions and zero-copy forks
-            new_rel = _write_segment_entries(table, entries)
-            res["segments_rewritten"] += 1
-            res["segments_resummarized"] += 1
-            return _summarize_segment(new_rel, entries), True
-        out = _summarize_segment(rel, entries)
-        if out.get("types"):
-            # count only when the re-summary actually gained a types
-            # block (ADVICE r10: a never-upgradeable segment re-counted
-            # on every re-run overstated the CLI verb's work)
-            res["segments_resummarized"] += 1
-            return out, True
-        return dict(s), False  # genuine member disagreement — unchanged
-
-    changed = False
-    clean_groups: list[dict] = []
-    pool: list[dict] = []
-    for g in head.get("groups", []):
-        if g.get("types"):
-            clean_groups.append(dict(g))
-            continue
-        ups = [_upgrade_summary(m) for m in _read_group(table, g["path"])]
-        if any(c for _s, c in ups):
-            changed = True
-            pool.extend(s for s, _c in ups)
-            continue
-        # members unchanged — but the GROUP entry itself may predate the
-        # group-level types block: re-summarize over the same group file
-        # (no member rewrite, no new file) and keep it if types appear
-        ng = _summarize_group(g["path"], [s for s, _c in ups])
-        if ng.get("types"):
-            changed = True
-            clean_groups.append(ng)
-        else:
-            clean_groups.append(dict(g))  # verbatim — idempotent re-run
-    for s in head.get("segments", []):
-        ns, c = _upgrade_summary(s)
-        changed = changed or c
-        pool.append(ns)
-    if not changed:
-        return res
-    groups, tail = _pack_groups(table, clean_groups, pool)
-    body = {
-        k: v
-        for k, v in head.items()
-        if k not in ("groups", "segments", "version", "operation",
-                     "committed_at")
-    }
-    body |= {
-        "version": cur + 1,
-        "operation": "upgrade_manifest",
-        "committed_at": time.time(),
-        "format": 2,
-        "segments": tail,
-    }
-    if groups:
-        body["groups"] = groups
-    _publish_raw(table, cur + 1, body)
-    res["upgraded"] = True
-    res["version"] = cur + 1
-    return res
-
-
-def convert_segment_format(table: str, to: str | None = None) -> dict:
-    """Rewrite every manifest segment not already in the target format
-    (default: the configured ``_segment_format``) as a NEW immutable
-    segment file in that format and publish ONE metadata commit over the
-    converted set — zero data-file reads or writes, entries carried
-    byte-exactly through the format hop (summaries keep every
-    entry-derived field and change only the member path). Existing
-    segment files keep serving older versions and zero-copy forks, and
-    vacuum GCs them once unreferenced — the same immutability story as
-    ``upgrade_manifest``'s rewrites. Groups whose members all already
-    match ride by reference; a group with any converted member has its
-    member list re-packed into new immutable group files. Converting a
-    CLONE rewrites the foreign segments it references into the clone's
-    OWN segdir (its data files stay zero-copy), unsharing the metadata
-    plane from the source. Idempotent: a fully-converted table publishes
-    nothing. Returns counters + the published version."""
-    to = to or _segment_format()
-    if to not in ("parquet", "json"):
-        raise ValueError(f"segment format {to!r}: use 'parquet' or 'json'")
-    cur = current_version(table)
-    if cur is None:
-        raise FileNotFoundError(f"no snapshots at {table}")
-    head = _read_manifest_head(table, cur)
-    res = {
-        "converted": False,
-        "segments_rewritten": 0,
-        "version": cur,
-        "format": to,
-    }
-    if not _is_sharded(head):
-        return res  # inline manifest — no segment files to convert
-    ext = "." + to
-
-    def _convert(s: dict) -> tuple[dict, bool]:
-        if s["path"].endswith(ext):
-            return dict(s), False
-        entries = _read_segment(table, s["path"])["entries"]
-        ns = dict(s)
-        ns["path"] = _write_segment_entries(table, entries, fmt=to)
-        res["segments_rewritten"] += 1
-        return ns, True
-
-    changed = False
-    clean_groups: list[dict] = []
-    pool: list[dict] = []
-    for g in head.get("groups", []):
-        members = [_convert(m) for m in _read_group(table, g["path"])]
-        if any(c for _m, c in members):
-            changed = True
-            pool.extend(m for m, _c in members)
-        else:
-            clean_groups.append(dict(g))  # verbatim — idempotent re-run
-    for s in head.get("segments", []):
-        ns, c = _convert(s)
-        changed = changed or c
-        pool.append(ns)
-    if not changed:
-        return res
-    groups, tail = _pack_groups(table, clean_groups, pool)
-    body = {
-        k: v
-        for k, v in head.items()
-        if k not in ("groups", "segments", "version", "operation",
-                     "committed_at")
-    }
-    body |= {
-        "version": cur + 1,
-        "operation": "convert_segment_format",
-        "committed_at": time.time(),
-        "format": 2,
-        "segments": tail,
-    }
-    if groups:
-        body["groups"] = groups
-    _publish_raw(table, cur + 1, body)
-    res["converted"] = True
-    res["version"] = cur + 1
-    return res
 
 
 def compact_deletes(spark: SparkSession, table: str) -> dict:
@@ -3691,11 +3411,9 @@ def table_statistics(table: str, version: int | None = None) -> dict:
     v = cur if version is None else version
     m = _read_manifest_head(table, v)
     summaries = m.get("groups", []) + m.get("segments", [])
-    if _is_sharded(m) and all(
-        s.get("stats_n") == s["n"] for s in summaries
-    ):
-        # sharded manifest, fully stats-bearing: the head's group and
-        # segment summaries answer it — O(head) regardless of file count
+    if all(s.get("stats_n") == s["n"] for s in summaries):
+        # fully stats-bearing: the head's group and segment summaries
+        # answer it — O(head) regardless of file count
         rows = sum(int(s["rows"]) for s in summaries)
         size = sum(int(s["bytes"]) for s in summaries)
         n_files = sum(int(s["n"]) for s in summaries)
@@ -3932,41 +3650,33 @@ def metadata_table(spark: SparkSession, table: str, kind: str) -> DataFrame:
     if kind == "manifests":
         # Iceberg's "table$manifests" analog: one row per manifest
         # SEGMENT of the current head (the grouped layer expanded), with
-        # its storage format, member count/bytes and recorded path range
-        # — summaries only, zero segment opens (this branch runs BEFORE
-        # the full hydration below). Inline (format-1) heads report zero
-        # rows: their file maps live in the head itself.
+        # its member count/bytes and recorded path range — summaries
+        # only, zero segment opens (this branch runs BEFORE the full
+        # hydration below).
         rows = []
-        if _is_sharded(head_only := _read_manifest_head(table, vs[-1])):
-            for s in _effective_segments(table, head_only):
-                ap = _segment_abspath(table, s["path"])
-                rows.append(
-                    {
-                        "path": s["path"],
-                        "format": (
-                            "parquet"
-                            if s["path"].endswith(".parquet")
-                            else "json"
-                        ),
-                        "n_files": int(s["n"]),
-                        "size_bytes": (
-                            os.path.getsize(ap)
-                            if os.path.exists(ap)
-                            else None
-                        ),
-                        "record_count": (
-                            int(s["rows"])
-                            if s.get("rows") is not None
-                            and int(s.get("stats_n", 0)) == int(s["n"])
-                            else None
-                        ),
-                        "lo_path": s.get("lo"),
-                        "hi_path": s.get("hi"),
-                    }
-                )
+        head_only = _read_manifest_head(table, vs[-1])
+        for s in _effective_segments(table, head_only):
+            ap = _segment_abspath(table, s["path"])
+            rows.append(
+                {
+                    "path": s["path"],
+                    "n_files": int(s["n"]),
+                    "size_bytes": (
+                        os.path.getsize(ap) if os.path.exists(ap) else None
+                    ),
+                    "record_count": (
+                        int(s["rows"])
+                        if s.get("rows") is not None
+                        and int(s.get("stats_n", 0)) == int(s["n"])
+                        else None
+                    ),
+                    "lo_path": s.get("lo"),
+                    "hi_path": s.get("hi"),
+                }
+            )
         return spark.createDataFrame(
             rows,
-            "path string, format string, n_files long, size_bytes long, "
+            "path string, n_files long, size_bytes long, "
             "record_count long, lo_path string, hi_path string",
         )
 
