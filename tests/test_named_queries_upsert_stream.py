@@ -13,7 +13,15 @@ from web_analytics_on_aws_spark.plans.named_queries import (
     named_query_statements,
     run_named_query,
 )
-from web_analytics_on_aws_spark.streaming.ingest_upsert import start_ingest_upsert
+from web_analytics_on_aws_spark.schema import WEB_LOG_ICEBERG_SCHEMA
+from web_analytics_on_aws_spark.sources.partitioning import set_partition_spec
+from web_analytics_on_aws_spark.sources.snapshots import (
+    _read_manifest,
+    commit_append,
+    current_version,
+    read_snapshot,
+)
+from web_analytics_on_aws_spark.streaming.snapshot_sink import start_snapshot_upsert
 
 
 def test_named_query_scripts_run_end_to_end(spark, tmp_path):
@@ -55,10 +63,29 @@ def _land(landing: str, name: str, lines: list[str]) -> None:
         f.write("\n".join(lines) + "\n")
 
 
+def _event_partitioned_table(spark, table: str) -> None:
+    """The iceberg variant's DDL (S12): an empty web_log table
+    ``PARTITIONED BY (event)``."""
+    commit_append(spark.createDataFrame([], WEB_LOG_ICEBERG_SCHEMA), table)
+    set_partition_spec(spark, table, [("event", "identity")])
+
+
+def _every_file_has_event_tuple(table: str) -> bool:
+    """Every data file holding rows carries an ``event`` partition tuple
+    (the DDL's empty schema-carrier file holds none)."""
+    m = _read_manifest(table, current_version(table))
+    fp, fs = m.get("file_partitions", {}), m["file_stats"]
+    filled = [f for f in m["files"] if fs[f]["rows"]]
+    return bool(filled) and all(
+        "event" in fp.get(f, {}).get("values", {}) for f in filled
+    )
+
+
 def test_streaming_upsert_pipeline_last_write_wins(spark, tmp_path):
     tmp = str(tmp_path)
     landing = f"{tmp}/landing"
     table = f"{tmp}/web_log_iceberg"
+    _event_partitioned_table(spark, table)
 
     bad = _rec("u9", "not-a-timestamp", "view", "/bad")
     _land(landing, "b1.jsonl", [
@@ -68,16 +95,16 @@ def test_streaming_upsert_pipeline_last_write_wins(spark, tmp_path):
     ])
 
     def run():
-        q = start_ingest_upsert(
+        q = start_snapshot_upsert(
             spark, landing, table, f"{tmp}/error", f"{tmp}/ckpt",
             unique_keys=["user_id", "timestamp"], available_now=True,
         )
         q.awaitTermination()
 
     run()
-    t = spark.read.parquet(table)
+    t = read_snapshot(spark, table)
     assert {r["user_id"]: r["uri"] for r in t.collect()} == {"u1": "/first", "u2": "/keep"}
-    assert spark.read.text(f"{tmp}/error").count() == 1
+    assert spark.read.text(f"{tmp}/error", recursiveFileLookup=True).count() == 1
 
     # batch 2: same (user_id, timestamp) key with new uri+event → replaces;
     # new key → inserts
@@ -86,7 +113,7 @@ def test_streaming_upsert_pipeline_last_write_wins(spark, tmp_path):
         _rec("u3", "2026-03-02T11:00:00Z", "visit", "/new"),
     ])
     run()
-    t = spark.read.parquet(table)
+    t = read_snapshot(spark, table)
     got = {r["user_id"]: (r["uri"], r["event"]) for r in t.collect()}
     assert got == {
         "u1": ("/updated", "purchase"),
@@ -94,7 +121,7 @@ def test_streaming_upsert_pipeline_last_write_wins(spark, tmp_path):
         "u3": ("/new", "visit"),
     }
     # event-partitioned layout (S12) and typed timestamp survive the pipeline
-    assert any(d.startswith("event=") for d in os.listdir(table))
+    assert _every_file_has_event_tuple(table)
     assert t.schema["timestamp"].dataType.typeName() == "timestamp"
 
 
@@ -104,11 +131,13 @@ def test_streaming_append_mode_without_keys(spark, tmp_path):
     tmp = str(tmp_path)
     landing = f"{tmp}/landing"
     table = f"{tmp}/web_log_append"
+    _event_partitioned_table(spark, table)
     _land(landing, "b1.jsonl", [_rec("u1", "2026-03-02T10:00:00Z", "view", "/a")])
     _land(landing, "b2.jsonl", [_rec("u1", "2026-03-02T10:00:00Z", "view", "/a")])
-    q = start_ingest_upsert(
+    q = start_snapshot_upsert(
         spark, landing, table, f"{tmp}/error", f"{tmp}/ckpt",
         unique_keys=None, available_now=True,
     )
     q.awaitTermination()
-    assert spark.read.parquet(table).count() == 2
+    assert read_snapshot(spark, table).count() == 2
+    assert _every_file_has_event_tuple(table)

@@ -535,8 +535,8 @@ def test_branch_and_fast_forward_carry_partitioning(registered, tmp_path):
 
 
 def test_merge_snapshot_keeps_identity_spec(registered, tmp_path):
-    """VERDICT r5 #4: the weblog MERGE path (merge_snapshot →
-    commit_overwrite) must route through the table's identity spec — one
+    """VERDICT r5 #4: the weblog MERGE path (merge_snapshot → CoW
+    merge_into) must route through the table's identity spec — one
     upsert must not silently de-partition the reference-parity
     PARTITIONED BY (event) table. Pins tuple carry + equality pruning
     after two overlapping merge batches."""

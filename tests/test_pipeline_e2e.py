@@ -17,10 +17,11 @@ from web_analytics_on_aws_spark.operators.compaction import (
     read_curated,
 )
 from web_analytics_on_aws_spark.operators.ingest import write_split
-from web_analytics_on_aws_spark.operators.upsert import merge_parquet
+from web_analytics_on_aws_spark.operators.upsert import merge_snapshot
 from web_analytics_on_aws_spark.operators.validate import validate
 from web_analytics_on_aws_spark.schema import WEB_LOG_SCHEMA
 from web_analytics_on_aws_spark.sources import catalog
+from web_analytics_on_aws_spark.sources.snapshots import read_snapshot
 
 
 def _make_record(i: int, ts: dt.datetime) -> dict:
@@ -173,7 +174,7 @@ def test_upsert_last_write_wins(spark, tmp_path):
         ],
         schema,
     )
-    merge_parquet(spark, b1, table, keys=["user_id", "timestamp"], order_col="seq")
+    merge_snapshot(spark, b1, table, keys=["user_id", "timestamp"], order_col="seq")
     b2 = spark.createDataFrame(
         [
             mk("1", "2026-03-02T10:00:00Z", "/new-a", 3),
@@ -182,18 +183,29 @@ def test_upsert_last_write_wins(spark, tmp_path):
         ],
         schema,
     )
-    merge_parquet(spark, b2, table, keys=["user_id", "timestamp"], order_col="seq")
+    merge_snapshot(spark, b2, table, keys=["user_id", "timestamp"], order_col="seq")
 
-    out = {r["user_id"]: r["uri"] for r in spark.read.parquet(table).collect()}
+    out = {r["user_id"]: r["uri"] for r in read_snapshot(spark, table).collect()}
     assert out == {"u1": "/new-b", "u2": "/keep", "u3": "/ins"}
-    assert spark.read.parquet(table).count() == 3
+    assert read_snapshot(spark, table).count() == 3
 
 
 def test_upsert_event_partitioned_iceberg_layout(spark, tmp_path):
     """S12/T4: the iceberg-flavor table is PARTITIONED BY (event)
     (web-analytics-iceberg/README.md:181); upserts land in per-event
-    directories and only touched partitions change."""
-    import os
+    files and only touched partitions change."""
+    from web_analytics_on_aws_spark.sources.partitioning import (
+        set_partition_spec,
+    )
+    from web_analytics_on_aws_spark.sources.snapshots import (
+        _read_manifest,
+        commit_append,
+        current_version,
+    )
+
+    def event_of_files():
+        m = _read_manifest(table, current_version(table))
+        return {f: m["file_partitions"][f]["values"]["event"] for f in m["files"]}
 
     tmp = str(tmp_path)
     table = f"{tmp}/web_log_iceberg"
@@ -205,22 +217,23 @@ def test_upsert_event_partitioned_iceberg_layout(spark, tmp_path):
         ],
         schema,
     )
-    merge_parquet(
-        spark, b1, table, keys=["user_id", "timestamp"],
-        partition_by=["event"], order_col="seq",
+    commit_append(b1.drop("seq").limit(0), table)
+    set_partition_spec(spark, table, [("event", "identity")])
+    merge_snapshot(
+        spark, b1, table, keys=["user_id", "timestamp"], order_col="seq"
     )
-    assert sorted(d for d in os.listdir(table) if d.startswith("event=")) == [
-        "event=cart", "event=view",
-    ]
+    before = event_of_files()
+    assert sorted(set(before.values())) == ["cart", "view"]
     b2 = spark.createDataFrame(
         [("u1", "2026-03-02T10:00:00Z", "purchase", "/a2", 3)], schema
     )
-    merge_parquet(
-        spark, b2, table, keys=["user_id", "timestamp"],
-        partition_by=["event"], order_col="seq",
+    merge_snapshot(
+        spark, b2, table, keys=["user_id", "timestamp"], order_col="seq"
     )
-    rows = {(r["user_id"], r["event"]) for r in spark.read.parquet(table).collect()}
+    rows = {(r["user_id"], r["event"]) for r in read_snapshot(spark, table).collect()}
     assert rows == {("u1", "purchase"), ("u2", "cart")}
+    after = event_of_files()
+    assert {f for f, e in before.items() if e == "cart"} <= set(after)
 
 
 def test_curated_scan_partition_pruned(spark, tmp_path):

@@ -8,6 +8,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from web_analytics_on_aws_spark.sources.snapshots import (
     commit_append,
     current_version,
@@ -15,7 +17,7 @@ from web_analytics_on_aws_spark.sources.snapshots import (
     last_committed_batch,
     read_snapshot,
 )
-from web_analytics_on_aws_spark.streaming.snapshot_sink import start_snapshot_ingest
+from web_analytics_on_aws_spark.streaming.snapshot_sink import start_snapshot_upsert
 
 
 def _rec(user: str, ts: str, event: str, uri: str) -> str:
@@ -35,8 +37,8 @@ def _land(landing: str, name: str, lines: list[str]) -> None:
 
 
 def _drain(spark, landing, table, err, ckpt):
-    q = start_snapshot_ingest(
-        spark, landing, table, err, ckpt, available_now=True
+    q = start_snapshot_upsert(
+        spark, landing, table, err, ckpt, unique_keys=None, available_now=True
     )
     q.awaitTermination(120)
 
@@ -52,7 +54,28 @@ def test_snapshot_sink_commits_and_quarantines(spark, tmp_path):
     assert read_snapshot(spark, table).count() == 5
     assert spark.read.text(f"{t}/err", recursiveFileLookup=True).count() == 2
     assert history(table)[-1]["operation"] == "append"
-    assert last_committed_batch(table, "snapshot-ingest") == 0
+    assert last_committed_batch(table, "snapshot-upsert") == 0
+
+
+@pytest.mark.parametrize(
+    "unique_keys,rows", [(None, 2), (["user_id", "timestamp"], 1)]
+)
+def test_sink_keys_switch_append_vs_upsert(spark, tmp_path, unique_keys, rows):
+    """T4's insert-vs-upsert switch: the same valid record drained in two
+    micro-batches is appended twice without unique keys (the reference's
+    keyless configuration) and kept once with them."""
+    t = str(tmp_path)
+    landing, table = f"{t}/landing", f"{t}/table"
+    rec = _rec("u1", "2026-03-02T13:45:00Z", "view", "/p/1")
+    for name in ("b1.jsonl", "b2.jsonl"):
+        _land(landing, name, [rec])
+        q = start_snapshot_upsert(
+            spark, landing, table, f"{t}/err", f"{t}/ckpt",
+            unique_keys=unique_keys, available_now=True,
+        )
+        q.awaitTermination(120)
+    assert read_snapshot(spark, table).count() == rows
+    assert last_committed_batch(table, "snapshot-upsert") == 1
 
 
 def test_snapshot_sink_replay_is_exactly_once(spark, tmp_path):

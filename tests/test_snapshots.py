@@ -75,6 +75,8 @@ def test_failed_write_cannot_corrupt_published_state(spark, tmp_path):
 
 
 def test_merge_snapshot_last_write_wins_with_time_travel(spark, tmp_path):
+    """merge_snapshot's first batch creates the table (append), the second
+    is a CoW merge_into: one version each, the older still readable."""
     import pyspark.sql.functions as F
 
     from web_analytics_on_aws_spark.operators.upsert import merge_snapshot

@@ -1,6 +1,6 @@
 """Sources parity: synthetic generator (S13), HTTP ingest shim (S1-S4),
-catalog listing ops (S3), operation tagging (T4) — end-to-end through the
-streaming ingest where applicable."""
+catalog listing ops (S3) — end-to-end through the streaming ingest where
+applicable."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import json
 import urllib.request
 
 from tests.conftest import SF_SMOKE
-from web_analytics_on_aws_spark.operators.upsert import tag_operation
 from web_analytics_on_aws_spark.operators.validate import validate, validity_metrics
 from web_analytics_on_aws_spark.sources.generator import fake_events, write_landing_batch
 from web_analytics_on_aws_spark.sources.http_shim import IngestShim
@@ -137,12 +136,6 @@ def test_write_landing_batch_and_ingest(spark, tmp_path):
     )
     assert spark.read.text(f"{tmp}/raw").count() == 20
     assert spark.read.text(f"{tmp}/error").count() == 5
-
-
-def test_tag_operation_mode_switch(spark):
-    df = spark.createDataFrame([(1,)], "x long")
-    assert tag_operation(df, ["user_id", "timestamp"]).first()["operation"] == "update"
-    assert tag_operation(df, None).first()["operation"] == "insert"
 
 
 def test_all_formats_roundtrip_losslessly(spark, tmp_path):

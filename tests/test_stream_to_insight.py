@@ -13,7 +13,7 @@ import os
 import pyspark.sql.functions as F
 
 from web_analytics_on_aws_spark.sources.snapshots import read_snapshot
-from web_analytics_on_aws_spark.streaming.snapshot_sink import start_snapshot_ingest
+from web_analytics_on_aws_spark.streaming.snapshot_sink import start_snapshot_upsert
 
 
 def _rec(user: str, ts: str, uri: str) -> str:
@@ -33,7 +33,9 @@ def _land(landing: str, name: str, lines: list[str]) -> None:
 
 
 def _drain(spark, landing, table, err, ckpt):
-    q = start_snapshot_ingest(spark, landing, table, err, ckpt, available_now=True)
+    q = start_snapshot_upsert(
+        spark, landing, table, err, ckpt, unique_keys=None, available_now=True
+    )
     assert q.awaitTermination(120), "drain did not finish within 120 s"
 
 

@@ -40,7 +40,7 @@ def _demo(workdir: str | None) -> int:
     from web_analytics_on_aws_spark.sources.http_shim import IngestShim
     from web_analytics_on_aws_spark.streaming.ingest_stream import run_ingest_once
     from web_analytics_on_aws_spark.streaming.snapshot_sink import (
-        start_snapshot_ingest,
+        start_snapshot_upsert,
     )
 
     base_dir = workdir or tempfile.mkdtemp(prefix="weblog-demo-")
@@ -117,9 +117,10 @@ def _demo(workdir: str | None) -> int:
         spark, f"{base_dir}/ice-landing", 120,
         base_hour=base_hour, dialect="iceberg", invalid_every=30,
     )
-    q = start_snapshot_ingest(
+    q = start_snapshot_upsert(
         spark, f"{base_dir}/ice-landing", f"{base_dir}/ice-table",
-        f"{base_dir}/ice-error", f"{base_dir}/ice-ckpt", available_now=True,
+        f"{base_dir}/ice-error", f"{base_dir}/ice-ckpt", unique_keys=None,
+        available_now=True,
     )
     q.awaitTermination(120)
     tbl = f"{base_dir}/ice-table"

@@ -168,8 +168,6 @@ def compact_partition_path(
     to the one directory."""
     import math
 
-    from web_analytics_on_aws_spark.operators.upsert import _swap_dirs
-
     path = f"{root}/{partition}"
     stats = [s for s in partition_file_stats(spark, root) if s["partition"] == partition]
     n_out = max(1, math.ceil((stats[0]["bytes"] if stats else 1) / target_file_bytes))
@@ -177,3 +175,17 @@ def compact_partition_path(
     spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
     _swap_dirs(tmp, path)
     return n_out
+
+
+def _swap_dirs(new: str, target: str) -> None:
+    import os
+    import shutil
+    import uuid
+
+    if os.path.isdir(target):
+        old = target.rstrip("/") + f".__old__{uuid.uuid4().hex[:8]}"
+        os.rename(target, old)
+        os.rename(new, target)
+        shutil.rmtree(old, ignore_errors=True)
+    else:
+        os.rename(new, target)

@@ -1,29 +1,33 @@
-"""Keyed upsert (MERGE) — the engine-side replacement for Firehose's
-Iceberg ``unique_keys`` path (SURVEY §2.7 T4/T5).
+"""Keyed upsert (MERGE) over snapshot tables — the engine-side replacement
+for Firehose's Iceberg ``unique_keys`` path (SURVEY §2.7 T4/T5).
 
 Reference semantics: when ``unique_keys = ["user_id", "timestamp"]`` is
-configured (/root/reference/web-analytics-datafirehose-iceberg/
-.example.cdk.context.json:22-24), every incoming record is tagged
+configured (web-analytics-datafirehose-iceberg/.example.cdk.context.json
+:22-24), every incoming record is tagged
 ``operation: 'update'`` (firehose_to_iceberg_transformer.py:114-115) and
 Firehose commits a MERGE into the Iceberg table: matched keys are replaced,
 unmatched inserted. Without unique keys, plain append.
 
-Spark-first, no table-format jar required: hand-rolled MERGE as
-  1. batch-local dedup — last write wins within the batch
-     (dropDuplicates on keys after ordering by arrival),
-  2. anti-join the existing table against batch keys (drop stale rows),
-  3. union the batch → dynamic-partition overwrite.
+The engine's table format (sources/snapshots.py) has its own MERGE, so
+``merge_snapshot`` is the one upsert: batch callers call it directly and
+the streaming sink (streaming/snapshot_sink.py) calls it per micro-batch.
+It picks the commit:
 
-With an Iceberg/Delta catalog available this collapses to a literal
-``MERGE INTO`` (merge_into_sql below). Single-writer micro-batches, as in
-Firehose — concurrent writers would need a table format with optimistic
-commits; documented limitation, same as the reference's single Firehose
-delivery stream.
+  1. keys given → last write wins within the batch (``dedup_batch`` over
+     the arrival order),
+  2. no keys, or no table yet → ``commit_append`` (T4's insert mode),
+  3. ``mode="cow"`` → ``snapshots.merge_into``: only the data files that
+     hold a matched key are rewritten,
+  4. ``mode="mor"`` → ``snapshots.upsert_keys_mor``: one commit of an
+     equality-delete sidecar plus the batch's rows, no read, no rewrite.
 
-Scale notes: the anti-join shuffles on the merge keys only; with the table
-partitioned by the iceberg layout (``event``, SURVEY §1.4) and dynamic
-overwrite enabled, only partitions present in the batch are rewritten, so
-cost is proportional to touched partitions, not table size.
+Every commit is atomic (readers pinned to older versions are unaffected; a
+crash leaves only unreferenced files for ``vacuum``) and
+``txn=(app_id, batch_id)`` makes it exactly-once under micro-batch replay.
+Both MERGE paths route the written rows through the table's partition
+spec, so the reference's ``PARTITIONED BY (event)`` layout survives
+upserts. With an Iceberg/Delta catalog the same operation is a literal
+``MERGE INTO`` (``merge_into_sql``).
 """
 
 from __future__ import annotations
@@ -34,89 +38,27 @@ from pyspark.sql import DataFrame, SparkSession, Window
 DEFAULT_UNIQUE_KEYS = ["user_id", "timestamp"]
 
 
-def tag_operation(batch: DataFrame, unique_keys: list[str] | None) -> DataFrame:
-    """T4 — the insert-vs-upsert mode switch: with unique keys configured
-    every record is tagged ``operation='update'``, else ``'insert'``
-    (firehose_to_iceberg_transformer.py:25-27,114-115). The tag selects the
-    downstream write path: merge_parquet / MERGE INTO vs plain append."""
-    op = "update" if unique_keys else "insert"
-    return batch.withColumn("operation", F.lit(op))
+def check_mode(mode: str) -> None:
+    if mode not in ("cow", "mor"):
+        raise ValueError(
+            f"mode must be 'cow' or 'mor', got {mode!r} — a silent "
+            "fall-through to CoW would defeat the point of the flag"
+        )
 
 
 def dedup_batch(
     batch: DataFrame,
-    keys: list[str] = DEFAULT_UNIQUE_KEYS,
-    order_col: str | None = None,
+    keys: list[str],
+    order_col: str,
 ) -> DataFrame:
-    """Last-write-wins within a micro-batch. With ``order_col`` (arrival
-    sequence), keep the max per key; otherwise an arbitrary-but-deterministic
-    single row per key via row_number over the key ordering."""
-    if order_col is None:
-        return batch.dropDuplicates(keys)
+    """Last-write-wins within a micro-batch: the row with the max
+    ``order_col`` (arrival sequence) per key."""
     w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
     return (
         batch.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def merge_parquet(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_path: str,
-    keys: list[str] = DEFAULT_UNIQUE_KEYS,
-    partition_by: list[str] | None = None,
-    order_col: str | None = None,
-) -> None:
-    """MERGE a batch into a plain-parquet table path (upsert semantics)."""
-    batch = dedup_batch(batch, keys, order_col)
-    if order_col is not None:
-        # arrival-order metadata served its last-write-wins purpose; the
-        # stored table keeps only data columns
-        batch = batch.drop(order_col)
-    batch = batch.cache()
-    try:
-        if _has_parquet(table_path):
-            existing = spark.read.parquet(table_path)
-            keep = existing.join(batch.select(*keys), keys, "left_anti")
-            merged = keep.unionByName(batch)
-        else:
-            merged = batch
-        # Parquet source can't read & overwrite the same path in one job;
-        # stage through a sibling dir then swap (atomic enough for the
-        # single-writer micro-batch model; a table format would do better).
-        tmp = table_path.rstrip("/") + ".__staging__"
-        writer = merged.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        _swap_dirs(tmp, table_path)
-    finally:
-        batch.unpersist()
-
-
-def _has_parquet(path: str) -> bool:
-    import glob
-    import os
-
-    return os.path.isdir(path) and bool(
-        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-
-
-def _swap_dirs(new: str, target: str) -> None:
-    import os
-    import shutil
-    import uuid
-
-    if os.path.isdir(target):
-        old = target.rstrip("/") + f".__old__{uuid.uuid4().hex[:8]}"
-        os.rename(target, old)
-        os.rename(new, target)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(new, target)
 
 
 def merge_into_sql(
@@ -137,28 +79,29 @@ def merge_snapshot(
     spark: SparkSession,
     batch: DataFrame,
     table: str,
-    keys: list[str] = DEFAULT_UNIQUE_KEYS,
+    keys: list[str] | None = DEFAULT_UNIQUE_KEYS,
     order_col: str | None = None,
-) -> int:
-    """MERGE a batch into a snapshot table (sources/snapshots.py) — the
-    table-format upgrade over ``merge_parquet``'s directory swap: the new
-    snapshot is published atomically, readers pinned to older versions are
-    unaffected, and a crash mid-merge leaves only unreferenced data files
-    (vacuum reclaims them) instead of a half-swapped directory. Returns the
-    committed version."""
-    from web_analytics_on_aws_spark.sources.snapshots import (
-        commit_overwrite,
-        read_snapshot,
-    )
+    mode: str = "cow",
+    txn: tuple[str, int] | None = None,
+) -> int | None:
+    """Upsert ``batch`` into the snapshot table at ``table`` keyed on
+    ``keys`` (module docstring): ``keys=None`` appends. ``order_col``
+    orders duplicate keys within a keyed batch (highest wins; default the
+    row's arrival position) and is not stored. ``mode="cow"`` refuses a
+    table with outstanding MOR deletes, as ``merge_into`` does.
 
-    batch = dedup_batch(batch, keys, order_col)
-    if order_col is not None:
-        batch = batch.drop(order_col)
-    try:
-        existing = read_snapshot(spark, table)
-    except FileNotFoundError:
-        merged = batch
-    else:
-        keep = existing.join(batch.select(*keys), keys, "left_anti")
-        merged = keep.unionByName(batch)
-    return commit_overwrite(merged, table)
+    Returns the committed version, or None for an empty batch."""
+    from web_analytics_on_aws_spark.sources import snapshots
+
+    check_mode(mode)
+    if keys is not None:
+        if order_col is None:
+            order_col = "__seq"
+            batch = batch.withColumn(order_col, F.monotonically_increasing_id())
+        batch = dedup_batch(batch, keys, order_col).drop(order_col)
+    if batch.limit(1).count() == 0:
+        return None
+    if keys is None or snapshots.current_version(table) is None:
+        return snapshots.commit_append(batch, table, txn=txn)
+    commit = snapshots.upsert_keys_mor if mode == "mor" else snapshots.merge_into
+    return commit(spark, table, batch, keys, txn=txn)["version"]

@@ -261,11 +261,12 @@ def _ensure_weblog_event_table(spark: SparkSession, sf_dir: str) -> str:
     """The reference's own table shape — ``PARTITIONED BY (event)`` with
     unique-key upserts (web-analytics-iceberg/README.md:181 +
     firehose_to_iceberg.py MERGE) — as a snapshot table with a real
-    identity spec, built THROUGH the merge path (merge_snapshot →
-    commit_overwrite routes the spec): batch 1 loads 60% of events, batch
-    2 re-delivers an overlapping window plus the rest, so the final table
-    is the keyed union and the table stays event-partitioned across
-    upserts."""
+    identity spec, built THROUGH the engine's one upsert path
+    (merge_snapshot; its CoW MERGE rewrites only the touched files and
+    routes the rewritten rows through the spec): batch 1 loads 60% of
+    events, batch 2 re-delivers an overlapping window plus the rest, so
+    the final table is the keyed union and the table stays
+    event-partitioned across upserts."""
     from web_analytics_on_aws_spark.operators.upsert import merge_snapshot
     from web_analytics_on_aws_spark.sources import partitioning, snapshots
 
@@ -311,8 +312,10 @@ def weblog_event_partition_rollup(
     parity table (VERDICT r5 #4): the ``event_type = 'purchase'`` filter
     prunes ~4/5 of the data files from manifest TUPLES alone — the exact
     read pattern the reference buys with ``PARTITIONED BY (event)`` — and
-    because the table was built through two overlapping MERGE batches, a
-    green oracle also proves the upsert path preserves partitioning.
+    because the table was built through two overlapping ``merge_snapshot``
+    batches (the same upsert the streaming sink commits), a green oracle
+    also proves the upsert path preserves partitioning and replaces, not
+    duplicates, re-delivered keys.
     Pruning pin: tests/test_partition_spec.py
     ::test_merge_snapshot_keeps_identity_spec."""
     table = _ensure_weblog_event_table(spark, sf_dir)

@@ -655,9 +655,6 @@ def _est_row_bytes(df: DataFrame, table: str) -> float:
 
 
 def _fanout_cap(df: DataFrame) -> int:
-    env = os.environ.get("SPARK_GRAFT_WRITE_FANOUT_CAP")
-    if env:
-        return max(1, int(env))
     # scale the bound with the cluster: a hot value may use every core
     # (×2 headroom), never fewer than the old fixed 8
     return max(8, 2 * df.sparkSession.sparkContext.defaultParallelism)

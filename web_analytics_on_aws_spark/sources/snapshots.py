@@ -1639,9 +1639,8 @@ def commit_overwrite(
         from web_analytics_on_aws_spark.sources.evolution import to_physical
 
         df = to_physical(df, sch, "commit_overwrite")
-    # hidden partitioning routes overwrites exactly like appends (the
-    # weblog MERGE path — merge_snapshot — rewrites the table per batch:
-    # without this, one upsert would silently de-partition it)
+    # hidden partitioning routes overwrites exactly like appends (without
+    # this, one overwrite would silently de-partition the table)
     pblock = m_prev.get("partitioning") or {}
     cur_spec = int(pblock.get("current") or 0)
     fparts: dict[str, dict] | None = None
@@ -3880,7 +3879,16 @@ def merge_into(
             raise RuntimeError(
                 f"matched files not in manifest v{cur}: {sorted(unknown)[:3]}"
             )
-        kept = [f for f in files if f not in touched]
+        # zero-row files (the schema carrier of an empty create-table
+        # append) hold nothing to carry: a merge that writes rows drops
+        # them, so no pre-spec straggler outlives the first upsert
+        fstats = head_m.get("file_stats") or {}
+        empty = {
+            f for f in files
+            if n_src and int((fstats.get(f) or {}).get("rows", -1)) == 0
+        }
+        removed = touched | empty
+        kept = [f for f in files if f not in removed]
         # stats count matched SOURCE keys, not matched target rows: a source
         # key hitting N>1 target rows must not inflate rows_updated or push
         # rows_inserted negative (ADVICE r2). The merge itself replaces ALL
@@ -3951,7 +3959,7 @@ def merge_into(
             file_partitions=fparts,
             file_stats=collect_file_stats(new_files, spark),
             new_files=new_files,
-            removed_files=sorted(touched),
+            removed_files=sorted(removed),
         )
         return {
             "version": version,

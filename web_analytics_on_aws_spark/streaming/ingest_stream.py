@@ -25,7 +25,8 @@ at-least-once delivery + downstream dedup posture.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -46,6 +47,41 @@ def read_landing_stream(
     return reader.load(landing_dir)
 
 
+def start_validated_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    checkpoint_dir: str,
+    dialect: str,
+    handle_batch: Callable[[DataFrame, int], None],
+    available_now: bool = False,
+    trigger_seconds: int | None = 60,
+    max_files_per_trigger: int | None = None,
+) -> StreamingQuery:
+    """The skeleton every landing-zone sink shares: each micro-batch of
+    landing lines is validated in ``dialect``, persisted for the
+    handler's several passes, handed to ``handle_batch(validated,
+    batch_id)`` and unpersisted. Trigger: ``available_now`` drains what
+    has landed and stops, else every ``trigger_seconds``."""
+    lines = read_landing_stream(spark, landing_dir, max_files_per_trigger)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        validated = validate(batch_df, value_col="value", dialect=dialect)
+        validated.persist()
+        try:
+            handle_batch(validated, batch_id)
+        finally:
+            validated.unpersist()
+
+    writer = lines.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
 def start_ingest(
     spark: SparkSession,
     landing_dir: str,
@@ -64,46 +100,37 @@ def start_ingest(
     with the Counter(total, valid, invalid) tally — parity with the
     validator Lambda's per-batch log line (A2, schema_validator.py:145).
     """
-    lines = read_landing_stream(spark, landing_dir, max_files_per_trigger)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        validated = validate(batch_df, value_col="value", dialect=dialect)
-        validated.persist()
-        try:
-            write_split(validated, raw_path, error_path)
-            if metrics_path:
-                import json
-                import os
+    def handle_batch(validated: DataFrame, batch_id: int) -> None:
+        write_split(validated, raw_path, error_path)
+        if metrics_path:
+            import json
+            import os
 
-                from web_analytics_on_aws_spark.operators.validate import (
-                    validity_metrics,
+            from web_analytics_on_aws_spark.operators.validate import (
+                validity_metrics,
+            )
+
+            m = validity_metrics(validated).first()
+            os.makedirs(metrics_path, exist_ok=True)
+            with open(os.path.join(metrics_path, f"batch-{batch_id}.json"), "w") as f:
+                f.write(
+                    json.dumps(
+                        {
+                            "batch_id": batch_id,
+                            "total": m["total"],
+                            "valid": m["valid"],
+                            "invalid": m["invalid"],
+                        }
+                    )
+                    + "\n"
                 )
 
-                m = validity_metrics(validated).first()
-                os.makedirs(metrics_path, exist_ok=True)
-                with open(os.path.join(metrics_path, f"batch-{batch_id}.json"), "w") as f:
-                    f.write(
-                        json.dumps(
-                            {
-                                "batch_id": batch_id,
-                                "total": m["total"],
-                                "valid": m["valid"],
-                                "invalid": m["invalid"],
-                            }
-                        )
-                        + "\n"
-                    )
-        finally:
-            validated.unpersist()
-
-    writer = lines.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_validated_stream(
+        spark, landing_dir, checkpoint_dir, dialect, handle_batch,
+        available_now=available_now, trigger_seconds=trigger_seconds,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_ingest_once(

@@ -1,11 +1,13 @@
 """Streaming → ACID snapshot table: exactly-once micro-batch commits.
 
 The reference's iceberg variants get exactly-once from Firehose committing
-each buffered batch into an Iceberg table (SURVEY §2.1 S9, §3.1 iceberg
-delta). This sink reproduces the guarantee on the jar-free snapshot format
-(sources/snapshots.py): ``foreachBatch`` stamps every append with
-``(app_id, batch_id)`` and ``commit_append`` refuses batches at-or-below
-the app's last committed id — so a replayed micro-batch (checkpoint rollback,
+each buffered batch into an Iceberg table — appends without unique keys,
+upserts with them (SURVEY §2.1 S9, §3.1 iceberg delta, §2.7 T4/T5). This
+sink reproduces the guarantee on the jar-free snapshot format
+(sources/snapshots.py): ``foreachBatch`` hands each validated micro-batch
+to ``operators.upsert.merge_snapshot`` stamped with ``(app_id,
+batch_id)``, and every commit refuses batches at-or-below the app's last
+committed id — so a replayed micro-batch (checkpoint rollback,
 at-least-once redelivery) is a durable no-op, not a duplicate.
 
 The result composes with the rest of the snapshot surface: time travel sees
@@ -14,9 +16,9 @@ each micro-batch as one version, `snapshot_changelog` (CDC) diffs them,
 
 Scale: one manifest write per micro-batch; the dedup check reads manifests
 newest-first and stops at the first stamp from this app — O(1) for a steady
-stream. Data files are whatever the batch writes — the incremental
-compaction planner (operators/compaction.py) handles small-file pressure
-exactly as it does for the hive zones.
+stream. Data files are whatever the batch writes — ``maintain_table`` and
+the compaction planner (operators/compaction.py) handle small-file
+pressure.
 """
 
 from __future__ import annotations
@@ -27,75 +29,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from web_analytics_on_aws_spark.operators.validate import RESULT_OK, validate
+from web_analytics_on_aws_spark.operators.upsert import check_mode, merge_snapshot
+from web_analytics_on_aws_spark.operators.validate import RESULT_OK
 from web_analytics_on_aws_spark.schema import WEB_LOG_ICEBERG_FIELDS
-from web_analytics_on_aws_spark.sources import snapshots
-from web_analytics_on_aws_spark.streaming.ingest_stream import read_landing_stream
-
-
-def start_snapshot_ingest(
-    spark: SparkSession,
-    landing_dir: str,
-    table: str,
-    error_path: str,
-    checkpoint_dir: str,
-    app_id: str = "snapshot-ingest",
-    available_now: bool = False,
-    trigger_seconds: int | None = 60,
-) -> StreamingQuery:
-    """Landing JSON-lines → validate (iceberg dialect) → typed append into
-    the snapshot table at ``table``, one atomic exactly-once commit per
-    micro-batch; invalid records quarantine to ``error_path`` (same
-    record-granularity routing as the hive-zone sink, T3)."""
-    lines = read_landing_stream(spark, landing_dir)
-    data_cols = [n for n, _ in WEB_LOG_ICEBERG_FIELDS]
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        validated = validate(batch_df, value_col="value", dialect="iceberg")
-        validated.persist()
-        try:
-            invalid = validated.filter(F.col("result") != RESULT_OK).select("value")
-            if invalid.limit(1).count() > 0:
-                from web_analytics_on_aws_spark.operators.ingest import (
-                    with_ingest_partitions,
-                )
-
-                # batch-keyed subdir + overwrite → a replayed micro-batch
-                # (checkpoint rollback) REPLACES its own quarantine output
-                # instead of appending duplicates; the error zone inherits
-                # the data zone's exactly-once property without txn state.
-                (
-                    with_ingest_partitions(invalid)
-                    .write.mode("overwrite")
-                    .partitionBy("year", "month", "day", "hour")
-                    .format("text")
-                    .save(os.path.join(error_path, f"batch={batch_id}"))
-                )
-            typed = validated.filter(F.col("result") == RESULT_OK).select(*data_cols)
-            if typed.limit(1).count() > 0:
-                # steady-state scope: once batches prove self-similar, the
-                # partitioned write sizes its exchange from the write-bytes
-                # EMA instead of running a per-trigger sizing job
-                # (partitioning.steady_state_writes — VERDICT r7 #4)
-                from web_analytics_on_aws_spark.sources.partitioning import (
-                    steady_state_writes,
-                )
-
-                with steady_state_writes(table):
-                    snapshots.commit_append(
-                        typed, table, txn=(app_id, batch_id)
-                    )
-        finally:
-            validated.unpersist()
-
-    writer = lines.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+from web_analytics_on_aws_spark.sources.partitioning import steady_state_writes
+from web_analytics_on_aws_spark.streaming.ingest_stream import start_validated_stream
 
 
 def start_snapshot_upsert(
@@ -110,93 +48,52 @@ def start_snapshot_upsert(
     trigger_seconds: int | None = 60,
     mode: str = "cow",
 ) -> StreamingQuery:
-    """Streaming MERGE into a snapshot table: landing → validate (iceberg
-    dialect) → last-write-wins within the batch → ``snapshots.merge_into``
-    keyed on ``unique_keys``, one atomic EXACTLY-ONCE commit per
-    micro-batch (txn-stamped: a replayed batch after checkpoint loss
-    neither duplicates inserts nor re-applies updates).
+    """Landing JSON-lines → validate (iceberg dialect) → one atomic
+    EXACTLY-ONCE commit per micro-batch into the snapshot table at
+    ``table``; invalid records quarantine to ``error_path`` (record
+    granularity, T3).
 
-    This is the ACID twin of ingest_upsert's hive-zone pipeline — the
-    reference's Firehose→Iceberg upsert configuration (unique_keys →
-    ``operation: update``, firehose_to_iceberg_transformer.py:114-138)
-    committed through the snapshot format's MERGE instead of partition
-    overwrite. ``unique_keys=None`` degrades to the plain exactly-once
-    append sink semantics.
-
-    ``mode="mor"`` commits each batch through
-    ``snapshots.upsert_keys_mor`` instead — ONE atomic commit carrying an
-    equality-delete sidecar + the batch's rows (Iceberg v2 / Flink upsert
-    writer shape): zero read, zero rewrite per batch, which is what keeps
-    a 60 s-trigger upsert stream affordable when the table is 100 TB —
-    merge_into's per-batch CoW rewrite cost grows with the touched file
-    set, the MOR commit stays O(|batch|). Schedule ``compact_deletes`` to
-    fold sidecars back in."""
-    from web_analytics_on_aws_spark.operators.upsert import (
-        DEFAULT_UNIQUE_KEYS,
-        dedup_batch,
-    )
-
-    if mode not in ("cow", "mor"):
-        raise ValueError(
-            f"mode must be 'cow' or 'mor', got {mode!r} — a silent "
-            "fall-through to CoW would defeat the point of the flag"
-        )
-    keys = unique_keys if unique_keys is not None else DEFAULT_UNIQUE_KEYS
-    lines = read_landing_stream(spark, landing_dir)
+    The reference's Firehose→Iceberg configuration switch (T4,
+    firehose_to_iceberg_transformer.py:114-138): ``unique_keys=None``
+    appends every valid record; with keys, each batch is upserted
+    (last write wins within the batch) through ``merge_snapshot`` — the
+    snapshot format's CoW MERGE, or with ``mode="mor"`` one commit of an
+    equality-delete sidecar plus the batch's rows (Iceberg v2 / Flink
+    upsert writer shape): zero read, zero rewrite per batch, which keeps a
+    60 s-trigger upsert stream O(|batch|) however large the table grows.
+    Schedule ``compact_deletes`` to fold sidecars back in."""
+    check_mode(mode)
     data_cols = [n for n, _ in WEB_LOG_ICEBERG_FIELDS]
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        validated = validate(batch_df, value_col="value", dialect="iceberg")
-        validated.persist()
-        try:
-            invalid = validated.filter(F.col("result") != RESULT_OK).select("value")
-            if invalid.limit(1).count() > 0:
-                from web_analytics_on_aws_spark.operators.ingest import (
-                    with_ingest_partitions,
-                )
-
-                (
-                    with_ingest_partitions(invalid)
-                    .write.mode("overwrite")
-                    .partitionBy("year", "month", "day", "hour")
-                    .format("text")
-                    .save(os.path.join(error_path, f"batch={batch_id}"))
-                )
-            typed = (
-                validated.filter(F.col("result") == RESULT_OK)
-                .select(*data_cols)
-                .withColumn("__seq", F.monotonically_increasing_id())
-            )
-            typed = dedup_batch(typed, keys=keys, order_col="__seq").drop("__seq")
-            if typed.limit(1).count() == 0:
-                return
-            from web_analytics_on_aws_spark.sources.partitioning import (
-                steady_state_writes,
+    def handle_batch(validated: DataFrame, batch_id: int) -> None:
+        invalid = validated.filter(F.col("result") != RESULT_OK).select("value")
+        if invalid.limit(1).count() > 0:
+            from web_analytics_on_aws_spark.operators.ingest import (
+                with_ingest_partitions,
             )
 
-            # steady-state EMA sizing for every per-trigger commit shape
-            # (append / MOR upsert / CoW merge) — VERDICT r7 #4
-            with steady_state_writes(table):
-                if snapshots.current_version(table) is None:
-                    snapshots.commit_append(
-                        typed, table, txn=(app_id, batch_id)
-                    )
-                elif mode == "mor":
-                    snapshots.upsert_keys_mor(
-                        spark, table, typed, keys, txn=(app_id, batch_id)
-                    )
-                else:
-                    snapshots.merge_into(
-                        spark, table, typed, keys, txn=(app_id, batch_id)
-                    )
-        finally:
-            validated.unpersist()
+            # batch-keyed subdir + overwrite → a replayed micro-batch
+            # (checkpoint rollback) REPLACES its own quarantine output
+            # instead of appending duplicates; the error zone inherits
+            # the data zone's exactly-once property without txn state.
+            (
+                with_ingest_partitions(invalid)
+                .write.mode("overwrite")
+                .partitionBy("year", "month", "day", "hour")
+                .format("text")
+                .save(os.path.join(error_path, f"batch={batch_id}"))
+            )
+        typed = validated.filter(F.col("result") == RESULT_OK).select(*data_cols)
+        # steady-state scope: once batches prove self-similar, the
+        # partitioned write sizes its exchange from the write-bytes EMA
+        # instead of running a per-trigger sizing job (VERDICT r7 #4)
+        with steady_state_writes(table):
+            merge_snapshot(
+                spark, typed, table, unique_keys, mode=mode,
+                txn=(app_id, batch_id),
+            )
 
-    writer = lines.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_validated_stream(
+        spark, landing_dir, checkpoint_dir, "iceberg", handle_batch,
+        available_now=available_now, trigger_seconds=trigger_seconds,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
