@@ -246,18 +246,19 @@ def test_zero_copy_clone_of_grouped_table(registered, tmp_path, tiny_groups):
     assert read_snapshot(spark, dst).count() == n + 10
 
 
-def test_unmapped_grouped_schema_probe_is_o_head(
+def test_grouped_schema_probe_is_o_head(
     registered, tmp_path, tiny_groups, monkeypatch
 ):
-    """A NEVER-mapped grouped table resolves its union schema from the
-    head's group/segment type summaries — zero segment or group opens."""
+    """A grouped table resolves its read schema from the head's schema
+    block, present from the first commit — zero segment or group opens."""
     spark = registered
     t = str(tmp_path / "t")
     commit_append(_events(spark, 0, 10).coalesce(1), t)
     for i in range(1, 16):
         commit_append(_events(spark, i * 10, i * 10 + 10).coalesce(1), t)
     head = _read_manifest_head(t, current_version(t))
-    assert head.get("groups") and head.get("schema") is None
+    assert head.get("groups")
+    assert [f["name"] for f in head["schema"]["fields"]] == ["id", "ev", "v"]
     seg_reads, grp_reads = [], []
     real_seg, real_grp = S._read_segment, S._read_group
     monkeypatch.setattr(

@@ -360,10 +360,15 @@ def test_show_table_partitions_manifest_only(registered, tmp_path, monkeypatch):
 
 
 def test_reader_schema_resolves_from_manifest(registered, tmp_path, monkeypatch):
-    """Unmapped tables: the DataSource's union schema comes from the
-    manifest's recorded per-file types — reader construction does zero
-    pq.read_schema walks (O(files) metadata reads at 100k files)."""
+    """The DataSource's schema comes from the head's schema block, present
+    from the first commit — reader construction does zero pq.read_schema
+    walks (O(files) metadata reads at 100k files)."""
+    from web_analytics_on_aws_spark.sources.snapshots import (
+        _read_manifest_head,
+    )
+
     t = _mk(registered, tmp_path)
+    assert _read_manifest_head(t, current_version(t))["schema"]
 
     import pyarrow.parquet as pq
 

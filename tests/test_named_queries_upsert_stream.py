@@ -71,13 +71,12 @@ def _event_partitioned_table(spark, table: str) -> None:
 
 
 def _every_file_has_event_tuple(table: str) -> bool:
-    """Every data file holding rows carries an ``event`` partition tuple
-    (the DDL's empty schema-carrier file holds none)."""
+    """Every data file carries an ``event`` partition tuple (the DDL's
+    empty create-table commit records the schema and publishes no file)."""
     m = _read_manifest(table, current_version(table))
-    fp, fs = m.get("file_partitions", {}), m["file_stats"]
-    filled = [f for f in m["files"] if fs[f]["rows"]]
-    return bool(filled) and all(
-        "event" in fp.get(f, {}).get("values", {}) for f in filled
+    fp = m.get("file_partitions", {})
+    return bool(m["files"]) and all(
+        "event" in fp.get(f, {}).get("values", {}) for f in m["files"]
     )
 
 

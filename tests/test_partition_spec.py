@@ -56,8 +56,9 @@ def _total(table):
 
 
 def _untupled(table):
-    """Files with no partition tuple (e.g. the pre-spec seed commit) —
-    never pruned by the partition check, by design."""
+    """Files with no partition tuple (written before the spec was set) —
+    never pruned by the partition check, by design. The empty create-table
+    commit writes no file, so a table specced right after it has none."""
     m = _read_manifest(table, current_version(table))
     fp = m.get("file_partitions", {})
     return sum(1 for f in m["files"] if f not in fp)
@@ -159,24 +160,6 @@ def test_transform_parity_digit_string_column(spark):
         assert P.apply_transform(f, r.z) == r.t == r.z[:4]
 
 
-def test_legacy_spec_mirrors_per_row_dispatch():
-    """Specs written before source_type existed routed digit strings
-    numerically; the planner must MIRROR that (equality stays exact) and
-    refuse the genuinely ambiguous cases (bucket-int width, truncate range
-    pruning)."""
-    trunc = {"name": "t", "source": "z", "transform": "truncate[4]"}
-    assert P.apply_transform(trunc, "12345") == "12344"  # numeric mirror
-    assert P.apply_transform(trunc, "abcdef") == "abcd"
-    assert P.apply_transform(trunc, 12345) == 12344
-    assert not P._range_safe(trunc)  # mixed dispatch is not monotonic
-    assert P._range_safe(trunc | {"source_type": "string"})
-    assert P._range_safe(trunc | {"source_type": "int"})
-    bucket = {"name": "b", "source": "n", "transform": "bucket[8]"}
-    with pytest.raises(TypeError, match="ambiguous"):
-        P.apply_transform(bucket, 3)  # hashInt(3) != hashLong(3)
-    assert not P._range_safe(bucket | {"source_type": "bigint"})
-
-
 # ---------------------------------------------------------------------------
 # spec DDL + partitioned append
 # ---------------------------------------------------------------------------
@@ -239,8 +222,8 @@ def test_day_range_prune_and_correctness(registered, tmp_path):
     assert un < _kept(t, [GreaterThanOrEqual(("ts",), lit)]) < _total(t)
     assert un < _kept(t, [LessThan(("ts",), lit)]) < _total(t)
     # exactly ONE day-partition file survives an equality probe (the
-    # writer's repartition bounds output at one file per value), plus the
-    # tuple-less pre-spec seed
+    # writer's repartition bounds output at one file per value), plus any
+    # tuple-less pre-spec file
     assert _kept(t, [EqualTo(("ts",), lit)]) == 1 + un
     # out-of-range probe plans zero tupled files
     assert _kept(
@@ -484,7 +467,7 @@ def test_optimize_preserves_partition_tuples(registered, tmp_path):
     res = optimize(spark, t, small_file_mb=8.0, min_small_files=2)
     assert res["rewritten"] >= 12  # all 4 days × 3 files compacted
     # every rewritten output carries its group's tuple: the same day probe
-    # now plans exactly ONE compacted file (plus the tuple-less seed)
+    # now plans exactly ONE compacted file (plus any tuple-less file)
     assert _kept(t, [EqualTo(("ts",), lit)]) == 1 + _untupled(t)
     m = _read_manifest(t, current_version(t))
     fp = m.get("file_partitions", {})
@@ -606,9 +589,9 @@ def test_wap_stage_routes_through_spec(registered, tmp_path):
 
     publish_wap(t, "audit1")
     assert len(_tuples(t)) > n_before
-    # every published staged file carries a day tuple: only the pre-spec
-    # seed remains untupled
-    assert _untupled(t) == 1
+    # every published staged file carries a day tuple (the empty
+    # create-table commit published no file)
+    assert _untupled(t) == 0
     from pyspark.sql.datasource import GreaterThanOrEqual
 
     assert _kept(
@@ -637,8 +620,9 @@ def test_compact_deletes_preserves_tuples(registered, tmp_path):
     assert res["files_rewritten"] > 0
     m = _read_manifest(t, current_version(t))
     fp = m.get("file_partitions", {})
-    # every rewritten survivor kept a day tuple; only the seed is untupled
-    assert _untupled(t) == 1
+    # every rewritten survivor kept a day tuple (the empty create-table
+    # commit published no file)
+    assert _untupled(t) == 0
     assert {e["values"]["ts_day"] for e in fp.values()} == {
         "2024-03-05", "2024-03-06", "2024-03-07", "2024-03-08"
     }
@@ -984,3 +968,51 @@ def test_fanout_micro_batch_skips_sizing_job(
     commit_append(df, t)
     assert read_snapshot(spark, t).count() == 100
     assert len(_tuples(t)) == 1  # one file for the one value
+
+
+def test_empty_table_is_a_schema_head_so_every_file_carries_a_tuple(
+    registered, tmp_path
+):
+    """The create-table idiom ``commit_append(df.limit(0))`` publishes a
+    head with the schema block and NO data file (a 0-row file would carry
+    no partition tuple, so pruning could never skip it). A spec set next
+    then covers every data file: each carries a tuple, none holds 0 rows,
+    and every head has its schema block from v1."""
+    from web_analytics_on_aws_spark.sources.snapshots import (
+        _read_manifest_head,
+        upsert_keys_mor,
+    )
+
+    spark = registered
+    t = str(tmp_path / "t")
+    ev = spark.createDataFrame(
+        [(1, "view"), (2, "buy"), (3, "view")], "uid bigint, event string"
+    )
+    v1 = commit_append(ev.limit(0), t)
+    assert [(f["name"], f["phys"], f["type"]) for f in
+            _read_manifest_head(t, v1)["schema"]["fields"]] == [
+        ("uid", "uid", "bigint"), ("event", "event", "string"),
+    ]
+    assert _read_manifest(t, v1)["files"] == []
+    empty = read_snapshot(spark, t)
+    assert empty.dtypes == [("uid", "bigint"), ("event", "string")]
+    assert empty.count() == 0
+    assert spark.read.format("snapshot").option("path", t).load().count() == 0
+
+    P.set_partition_spec(spark, t, [("event", "identity")])
+    commit_append(ev, t)
+    upsert_keys_mor(
+        spark, t,
+        spark.createDataFrame([(2, "view")], "uid bigint, event string"),
+        ["uid"],
+    )
+    m = _read_manifest(t, current_version(t))
+    assert m["files"]
+    for f in m["files"]:
+        assert f in m["file_partitions"], f"untupled data file {f}"
+        assert m["file_stats"][f]["rows"] > 0, f"0-row data file {f}"
+    for v in range(1, current_version(t) + 1):
+        assert _read_manifest_head(t, v)["schema"]["fields"]
+    assert _rows(read_snapshot(spark, t)) == [
+        (1, "view"), (2, "view"), (3, "view"),
+    ]

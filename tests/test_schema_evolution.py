@@ -85,6 +85,35 @@ def test_unknown_column_write_refused_on_mapped_table(spark, tmp_path):
         )
 
 
+def test_mistyped_write_refused_and_table_still_reads(spark, tmp_path):
+    """A write whose column type is neither the declared type nor one the
+    reader up-casts to it would publish a file every later read fails on
+    (PARQUET_COLUMN_DATA_TYPE_MISMATCH): refuse it, naming both types."""
+    t = str(tmp_path / "t")
+    S.commit_append(
+        spark.createDataFrame([(1, "view")], "uid bigint, event string"), t
+    )
+    E.evolve_rename_column(spark, t, "uid", "user_id")
+    v = S.current_version(t)
+    with pytest.raises(ValueError, match=r"user_id: string written, bigint declared"):
+        S.commit_append(
+            spark.createDataFrame(
+                [("x", "buy")], "user_id string, event string"
+            ),
+            t,
+        )
+    assert S.current_version(t) == v  # nothing published
+    # a narrower type the reader up-casts is accepted
+    S.commit_append(
+        spark.createDataFrame([(2, "buy")], "user_id int, event string"), t
+    )
+    out = S.read_snapshot(spark, t)
+    assert dict(out.dtypes)["user_id"] == "bigint"
+    assert sorted((r.user_id, r.event) for r in out.collect()) == [
+        (1, "view"), (2, "buy"),
+    ]
+
+
 def test_rename_refused_while_constraint_references(spark, tmp_path):
     t = _mk(spark, tmp_path)
     S.set_constraints(spark, t, {"v_nonneg": "v >= 0"})
@@ -314,7 +343,7 @@ def test_widen_int_to_bigint_metadata_only(spark, tmp_path):
     S.commit_append(
         spark.createDataFrame([(1, 7), (2, 8)], "k int, v int"), t
     )
-    # first evolution synthesizes the identity mapping
+    # the first commit recorded the identity mapping; widening edits it
     v = E.evolve_widen_column(spark, t, "v", "bigint")
     files_before = set(S._read_manifest(t, v - 1)["files"])
     assert set(S._read_manifest(t, v)["files"]) == files_before  # no rewrite

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from web_analytics_on_aws_spark.sources.evolution import evolve_add_column
 from web_analytics_on_aws_spark.sources.snapshot_datasource import (
     planned_files,
     SnapshotDataSource,
@@ -46,12 +47,30 @@ def test_format_read_pads_evolved_schema(registered, tmp_path):
     spark = registered
     t = str(tmp_path / "t")
     commit_append(spark.range(0, 10).selectExpr("id"), t)
+    evolve_add_column(spark, t, "v", "bigint")
     commit_append(spark.range(10, 20).selectExpr("id", "id * 2 AS v"), t)
 
     df = spark.read.format("snapshot").option("path", t).load()
     assert set(df.columns) == {"id", "v"}
     got = {r["id"]: r["v"] for r in df.collect()}
     assert got[5] is None and got[15] == 30  # old files read as null
+
+
+def test_format_read_keeps_struct_field_case(registered, tmp_path):
+    """Struct field names keep their case through the schema block: the
+    file's struct column must cast onto the declared arrow type, which a
+    lowercased ``struct<userid:...>`` does not match."""
+    spark = registered
+    t = str(tmp_path / "t")
+    commit_append(
+        spark.createDataFrame(
+            [(1, (7, "a"))], "id bigint, s struct<UserId:bigint,Tag:string>"
+        ),
+        t,
+    )
+    df = spark.read.format("snapshot").option("path", t).load()
+    assert df.schema["s"].dataType.fieldNames() == ["UserId", "Tag"]
+    assert _rows(df) == _rows(read_snapshot(spark, t))
 
 
 def test_pushed_filters_skip_files_by_footer_stats(registered, tmp_path):
@@ -84,6 +103,7 @@ def test_filter_on_absent_column_keeps_file(registered, tmp_path):
     spark = registered
     t = str(tmp_path / "t")
     commit_append(spark.range(0, 10).selectExpr("id"), t)
+    evolve_add_column(spark, t, "v", "bigint")
     commit_append(spark.range(10, 20).selectExpr("id", "id * 2 AS v"), t)
     # v is absent in file 1 → skipping must not drop it (its v reads null,
     # and null-safe Spark evaluation decides, not our stats)
@@ -142,6 +162,7 @@ def test_version_pinned_across_schema_and_reader(registered, tmp_path):
     t = str(tmp_path / "t")
     commit_append(spark.range(0, 10).selectExpr("id"), t)
     df = spark.read.format("snapshot").option("path", t).load()
+    evolve_add_column(spark, t, "extra", "bigint")
     commit_append(spark.range(10, 30).selectExpr("id", "id AS extra"), t)
     # planned against v1: old rows only, old schema only
     assert df.count() == 10
@@ -182,6 +203,7 @@ def test_columns_option_prunes_schema_and_matches_full_read(registered, tmp_path
     t = str(tmp_path / "t")
     commit_append(spark.range(0, 10).selectExpr("id", "id * 2 AS v"), t)
     # evolution: a third column the first file predates
+    evolve_add_column(spark, t, "w", "bigint")
     commit_append(
         spark.range(10, 20).selectExpr("id", "id * 2 AS v", "id + 100 AS w"), t
     )

@@ -105,9 +105,12 @@ def test_merge_snapshot_last_write_wins_with_time_travel(spark, tmp_path):
 
 def test_snapshot_additive_schema_evolution(spark, tmp_path):
     from web_analytics_on_aws_spark.sources import snapshots as S
+    from web_analytics_on_aws_spark.sources.evolution import evolve_add_column
 
     t = str(tmp_path / "tbl")
     v1 = S.commit_append(spark.createDataFrame([(1, "a")], ["id", "name"]), t)
+    # adding a column is an explicit schema commit; writes never widen
+    evolve_add_column(spark, t, "note", "string")
     v2 = S.commit_append(
         spark.createDataFrame([(2, "b", "extra")], ["id", "name", "note"]), t
     )
@@ -117,7 +120,7 @@ def test_snapshot_additive_schema_evolution(spark, tmp_path):
     assert got == {1: None, 2: "extra"}  # old files surface new col as NULL
     old = S.read_snapshot(spark, t, version=v1)
     assert set(old.columns) == {"id", "name"}  # time travel keeps old schema
-    assert v2 == v1 + 1
+    assert v2 == v1 + 2  # the evolve commit sits between the appends
 
 
 def test_delete_where_cow_prunes_untouched_files(spark, tmp_path):

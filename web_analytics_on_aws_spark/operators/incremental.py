@@ -201,5 +201,17 @@ def follow_table_rollup(
     new_view = apply_change_feed(
         base, changes, rollup_fn, keys, sum_measures, count_col=count_col
     )
+    # folding can widen a measure (a decimal SUM of sums gains precision);
+    # writes never change the view's schema implicitly, so declare the
+    # wider type first
+    from web_analytics_on_aws_spark.sources import evolution
+
+    declared = {
+        f["name"]: f["type"]
+        for f in evolution.table_schema(view_table)["fields"]
+    }
+    for c, t in new_view.dtypes:
+        if c in declared and evolution._widenable(declared[c], t):
+            evolution.evolve_widen_column(spark, view_table, c, t)
     snapshots.commit_overwrite(new_view, view_table, txn=(app_id, src_head))
     return {"from": last, "to": src_head, "bootstrap": False, "applied": True}

@@ -186,13 +186,6 @@ def with_lsh_bands(
     )
 
 
-def with_lsh_bucket(
-    df: DataFrame, vec_col: str = "embedding", planes: int = 8, out: str = "bucket"
-) -> DataFrame:
-    srp = _srp_band_keys(1, planes)
-    return df.withColumn(out, F.element_at(srp(F.col(vec_col)), 1))
-
-
 def lsh_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,

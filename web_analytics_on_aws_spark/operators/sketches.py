@@ -102,14 +102,6 @@ def kll_quantiles(
     return out.drop("q_sketch")
 
 
-def theta_rollup(df: DataFrame, keys: Sequence[str], col: str) -> DataFrame:
-    """Per-group theta sketch (supports set algebra across groups; exact
-    below its nominal-entries threshold, sampled above)."""
-    return df.groupBy(*keys).agg(
-        F.theta_sketch_agg(F.col(col)).alias("theta_sketch")
-    )
-
-
 def within_tolerance(est: Column, exact: Column, rel: float) -> Column:
     """Audit predicate: |est − exact| ≤ rel · exact (TRUE on both engines
     when the sketch honors its error bound — the oracle side emits literal

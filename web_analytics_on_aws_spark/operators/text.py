@@ -57,24 +57,6 @@ def quality_score(text_col: str = "text") -> Column:
     return F.round((len_score + word_score + alpha_ratio) / F.lit(3.0), 6)
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stamp per-document analysis columns: predicted language, quality
-    score, token count, rolling-hash fingerprint."""
-    return (
-        df.withColumn("pred_lang", lang_id(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("n_tokens", token_count(F.col(text_col)))
-        .withColumn(
-            "fingerprint",
-            F.md5(
-                F.array_join(
-                    F.array_sort(F.array_distinct(token_split(F.col(text_col)))), " "
-                )
-            ),
-        )
-    )
-
-
 def redact_pii(col: Column | str) -> Column:
     """Mask common PII shapes (emails, phone-like sequences, long digit
     runs) — the pre-training privacy scrub step. Pure JVM regexp_replace

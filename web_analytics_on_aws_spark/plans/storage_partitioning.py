@@ -263,10 +263,13 @@ def _ensure_weblog_event_table(spark: SparkSession, sf_dir: str) -> str:
     firehose_to_iceberg.py MERGE) — as a snapshot table with a real
     identity spec, built THROUGH the engine's one upsert path
     (merge_snapshot; its CoW MERGE rewrites only the touched files and
-    routes the rewritten rows through the spec): batch 1 loads 60% of
+    routes the rewritten rows through the spec). Like the reference's
+    ``CREATE TABLE``, the empty first append declares the schema before
+    any row lands: it commits a head with the schema block and no data
+    file, so the spec set next covers every file. Batch 1 loads 60% of
     events, batch 2 re-delivers an overlapping window plus the rest, so
-    the final table is the keyed union and the table stays
-    event-partitioned across upserts."""
+    the final table is the keyed union and every data file carries its
+    event tuple."""
     from web_analytics_on_aws_spark.operators.upsert import merge_snapshot
     from web_analytics_on_aws_spark.sources import partitioning, snapshots
 
@@ -731,8 +734,8 @@ def snapshot_sharded_manifest_rollup(
     reference to managed Iceberg). The oracle runs the same window over
     the source parquet: segment skipping must be invisible in results.
     Scale pins: tests/test_manifest_sharding.py (format, O(1)-segment
-    commits, skipping, vacuum GC); tools/manifest_shard_probe.py measures
-    plan bytes ∝ selectivity at 10k/100k files."""
+    commits, skipping, vacuum GC); SCALE.md records plan bytes ∝
+    selectivity at 10k/100k files."""
     table = _ensure_sharded_day_table(spark, sf_dir)
     cutoff = "2024-01-25 00:00:00"
     return (

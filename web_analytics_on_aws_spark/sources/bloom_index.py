@@ -100,16 +100,18 @@ def build_bloom_index(
 
     from web_analytics_on_aws_spark.sources.snapshots import (
         _read_manifest,
+        _scan_files,
         current_version,
     )
 
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    files = _read_manifest(table, cur)["files"]
+    m = _read_manifest(table, cur)
+    files = m["files"]
     out: dict[str, int] = {}
     for col in cols:
-        src = spark.read.option("mergeSchema", "true").parquet(*files)
+        src = _scan_files(spark, files, m["schema"])
         dtype = dict(src.dtypes).get(col)
         if dtype not in _SUPPORTED_TYPES:
             raise TypeError(

@@ -288,15 +288,19 @@ class SnapshotChangesDataSource(DataSource):
         immutable data file by the stable physical names — a rename
         mid-history changes neither the bytes nor the events."""
         from web_analytics_on_aws_spark.sources.snapshot_datasource import (
-            _mapped_arrow_schema,
+            _logical_arrow_schema,
+        )
+        from web_analytics_on_aws_spark.sources.snapshots import (
+            _read_manifest_head,
         )
 
         vs = _versions(self.options["path"])
         if not vs:
             raise FileNotFoundError(f"no snapshots at {self.options['path']}")
-        m = _manifest(self.options["path"], vs[-1])
-        arrow, mapping = _mapped_arrow_schema(m)
-        phys_names = [mapping.get(n, n) for n in arrow.names]
+        arrow, mapping = _logical_arrow_schema(
+            _read_manifest_head(self.options["path"], vs[-1])
+        )
+        phys_names = [mapping[n] for n in arrow.names]
         return arrow, phys_names
 
     def schema(self):

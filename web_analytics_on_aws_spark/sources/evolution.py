@@ -1,17 +1,22 @@
-"""ALTER TABLE schema evolution for snapshot tables — rename / drop / add
+"""Schema evolution for snapshot tables — rename / drop / add / widen
 with Delta-style column mapping (Iceberg field-ID semantics), jar-free.
 
 The reference commits to managed Iceberg tables whose schema can evolve in
 place (web-analytics-iceberg/README.md — Iceberg's headline feature set);
-this module closes that gap for the hand-rolled snapshot format. The head
-manifest carries a ``schema`` block::
+this module closes that gap for the hand-rolled snapshot format. Like an
+Iceberg table's metadata, every head manifest carries a ``schema`` block
+from the table's FIRST commit on::
 
     {"fields": [{"id": 1, "name": "logical", "phys": "physical",
                  "type": "bigint"}, ...],
      "next_id": N}
 
-and the invariant is: **parquet data files always store PHYSICAL names;
-the logical schema exists only in table metadata.** Consequences:
+The first ``commit_append``/``commit_overwrite`` writes the identity
+mapping of the written DataFrame (``identity_schema``: ids in column
+order, ``phys`` equal to the name, types from ``df.dtypes``), so an empty
+table is a head with a schema and no data files. The invariant is:
+**parquet data files always store PHYSICAL names; the logical schema
+exists only in table metadata.** Consequences:
 
 - RENAME is a metadata-only commit (logical name changes, ``phys`` stays —
   no data file is ever rewritten, exactly like Iceberg field IDs / Delta
@@ -20,7 +25,11 @@ the logical schema exists only in table metadata.** Consequences:
   stay until files are naturally rewritten — reads never project them);
 - ADD allocates a fresh field id with a collision-proof physical name
   ``_f{id}_{name}``; re-adding a dropped name gets a NEW id, so the old
-  column's data is never resurrected (Iceberg's id-based contract);
+  column's data is never resurrected (Iceberg's id-based contract). It is
+  the only way to add a column: writes refuse columns the schema lacks;
+- WIDEN changes a field's declared type along Iceberg's safe promotions;
+  writes must carry each column at its declared type or a type the
+  reader up-casts to it (``to_physical``);
 - every manifest carries the schema that was current AT THAT COMMIT, so
   time travel / VERSION AS OF reads automatically render each version
   under its own schema — a read of v3 shows v3's column names;
@@ -43,8 +52,19 @@ from pyspark.sql import DataFrame, SparkSession
 SCHEMA_KEY = "schema"
 
 
-def manifest_schema(m: dict) -> dict | None:
-    return m.get(SCHEMA_KEY)
+def manifest_schema(m: dict) -> dict:
+    return m[SCHEMA_KEY]
+
+
+def identity_schema(df: DataFrame) -> dict:
+    """The schema block a table's first commit records: one field per
+    column of ``df`` in order, its physical name equal to its name and
+    its type ``df.dtypes`` renders."""
+    fields = [
+        {"id": i + 1, "name": n, "phys": n, "type": t}
+        for i, (n, t) in enumerate(df.dtypes)
+    ]
+    return {"fields": fields, "next_id": len(fields) + 1}
 
 
 def phys_for(schema: dict) -> dict[str, str]:
@@ -72,19 +92,31 @@ def logical_projection(df: DataFrame, schema: dict, keep: tuple = ()):
 
 def to_physical(df: DataFrame, schema: dict, op: str) -> DataFrame:
     """Rename a LOGICAL DataFrame's columns to their physical storage
-    names before writing. Unknown columns are refused loudly — on a
-    column-mapped table, widening the schema is an explicit
-    ``evolve_add_column``, never a side effect of a write (the silent
-    auto-add of unmapped tables would bypass id allocation)."""
+    names before writing. Refused loudly: a column the schema lacks
+    (widening the schema is an explicit ``evolve_add_column``, never a
+    side effect of a write — it would bypass id allocation), and a column
+    whose type is neither its declared type nor one the reader up-casts
+    to it (``_widenable``) — such a file would fail every later read."""
     import pyspark.sql.functions as F
 
     mapping = phys_for(schema)
     unknown = sorted(set(df.columns) - set(mapping))
     if unknown:
         raise ValueError(
-            f"{op}: columns {unknown} not in the table schema — run "
-            "evolve_add_column first (column-mapped tables never widen "
-            "implicitly)"
+            f"{op}: columns {unknown} not in table schema — run "
+            "evolve_add_column first (writes never widen the schema)"
+        )
+    declared = {f["name"]: f["type"] for f in schema["fields"]}
+    bad = [
+        f"{c}: {t} written, {declared[c]} declared"
+        for c, t in df.dtypes
+        if t != declared[c] and not _widenable(t, declared[c])
+    ]
+    if bad:
+        raise ValueError(
+            f"{op}: column type mismatch against the table schema "
+            f"({'; '.join(bad)}) — cast the columns, or evolve_widen_column "
+            "for a safe promotion"
         )
     return df.select(*[F.col(c).alias(mapping[c]) for c in df.columns])
 
@@ -97,31 +129,17 @@ def translate_keys(schema: dict, keys: list[str], op: str) -> list[str]:
     return [mapping[k] for k in keys]
 
 
-def _derive_schema(spark: SparkSession, m: dict) -> dict:
-    """First evolution on a legacy (unmapped) table: synthesize the
-    identity mapping from the head's unified file schema — every existing
-    column keeps its name as its physical name, so all existing files
-    remain readable unchanged."""
-    df = spark.read.option("mergeSchema", "true").parquet(*m["files"])
-    fields = [
-        {"id": i + 1, "name": n, "phys": n, "type": t}
-        for i, (n, t) in enumerate(df.dtypes)
-    ]
-    return {"fields": fields, "next_id": len(fields) + 1}
-
-
-def table_schema(table: str, version: int | None = None) -> dict | None:
-    """The column-mapping schema at ``version`` (default head), or None
-    for tables that have never evolved."""
+def table_schema(table: str, version: int | None = None) -> dict:
+    """The column-mapping schema at ``version`` (default head)."""
     from web_analytics_on_aws_spark.sources.snapshots import (
-        _read_manifest,
+        _read_manifest_head,
         current_version,
     )
 
     v = current_version(table) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    return manifest_schema(_read_manifest(table, v))
+    return manifest_schema(_read_manifest_head(table, v))
 
 
 def _constraint_mentions(m: dict, column: str) -> list[str]:
@@ -137,26 +155,26 @@ def _evolve(spark: SparkSession, table: str, op: str, mutate) -> int:
     from web_analytics_on_aws_spark.sources.snapshots import (
         _manifest_deletes,
         _manifest_eq_deletes,
-        _manifest_file_seq,
         _publish,
-        _read_manifest,
+        _read_manifest_head,
         current_version,
     )
 
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    m = _read_manifest(table, cur)
-    schema = copy.deepcopy(manifest_schema(m)) or _derive_schema(spark, m)
+    m = _read_manifest_head(table, cur)
+    schema = copy.deepcopy(manifest_schema(m))
     mutate(schema, m)
     # metadata-only commit: same files, same sidecars, same sequences —
-    # only the schema block changes
+    # only the schema block changes, so it publishes as an empty delta
+    # over the head
     _publish(
-        table, cur + 1, m["files"], op,
+        table, cur + 1, None, op,
         delete_files=_manifest_deletes(m),
         eq_deletes=_manifest_eq_deletes(m),
-        file_seq=_manifest_file_seq(m),
         schema=schema,
+        new_files=[], removed_files=[],
     )
     return cur + 1
 
@@ -169,7 +187,9 @@ def evolve_add_column(
     of the same name can never resurrect this column's bytes."""
     from pyspark.sql.types import _parse_datatype_string
 
-    _parse_datatype_string(dtype)  # fail fast on an unparseable type
+    # fail fast on an unparseable type; store it as df.dtypes renders it,
+    # the form writes are checked against (to_physical)
+    dtype = _parse_datatype_string(dtype).simpleString()
 
     def mutate(schema: dict, m: dict) -> None:
         if name in phys_for(schema):
@@ -250,7 +270,7 @@ def evolve_widen_column(
     growth); anything lossy raises."""
     from pyspark.sql.types import _parse_datatype_string
 
-    _parse_datatype_string(dtype)
+    dtype = _parse_datatype_string(dtype).simpleString()
 
     def mutate(schema: dict, m: dict) -> None:
         mapping = phys_for(schema)

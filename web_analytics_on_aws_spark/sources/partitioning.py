@@ -199,13 +199,6 @@ def _parse(transform: str):
     raise ValueError(f"unknown partition transform {transform!r}")
 
 
-def is_monotonic(transform: str) -> bool:
-    """Monotonic transforms preserve source-column ordering, so range
-    predicates on the source prune on the transformed value. Bucket is
-    the lone non-monotonic transform (equality/IN probes only)."""
-    return _parse(transform)[0] != "bucket"
-
-
 # Spark integral simpleStrings — the types whose truncate floors numerically
 # and whose bucket hash must go through hashLong on BOTH sides (the write
 # expression casts them to long; see transform_expr).
@@ -229,20 +222,16 @@ def _range_safe(field: dict) -> bool:
     """May range predicates prune on this field's transformed value?
 
     Bucket never (hash destroys order). Truncate is order-preserving only
-    under STATIC dispatch over an order-compatible type: integral floors
-    preserve numeric order and string prefixes preserve lexical order, but
-    any OTHER stamped type truncated its string RENDERING, whose lexical
-    order disagrees with the source order ('10.' < '9.5' — ADVICE r6), and
-    a legacy spec without ``source_type`` dispatched PER ROW on the
-    rendered value (digit strings floored, others prefixed), and the mix
-    is not monotonic — '10' truncates to '8', which sorts above it
-    (ADVICE r5). Both therefore prune equality/IN only (and non-integral
-    numerics not even that — see apply_transform)."""
+    over an order-compatible source type: integral floors preserve numeric
+    order and string prefixes preserve lexical order, but any OTHER type
+    truncated its string RENDERING, whose lexical order disagrees with the
+    source order ('10.' < '9.5' — ADVICE r6); set_partition_spec refuses
+    those, and the planner keeps their files (see apply_transform)."""
     kind, _ = _parse(field["transform"])
     if kind == "bucket":
         return False
     if kind == "truncate":
-        return field.get("source_type") in _TRUNCATABLE
+        return field["source_type"] in _TRUNCATABLE
     return True
 
 
@@ -252,18 +241,16 @@ def transform_expr(field: dict) -> Column:
     leaves whole-stage codegen.
 
     Dispatch is on the spec-recorded ``source_type`` (set_partition_spec
-    stamps it from the table schema), NEVER on the runtime value: a STRING
-    column holding '12345' must truncate to its prefix like every other
-    string, and an INT column must bucket through the same hash width the
-    planner uses on its literals (ADVICE r5 — both were per-row/per-width
-    dispatch bugs). Specs written before source_type existed keep the old
-    per-row behavior; the planner mirrors it exactly (apply_transform) and
-    gives up the unsound cases (_range_safe, bucket-int ambiguity)."""
+    stamps every field from the table schema), NEVER on the runtime value:
+    a STRING column holding '12345' must truncate to its prefix like every
+    other string, and an INT column must bucket through the same hash
+    width the planner uses on its literals (ADVICE r5 — both were
+    per-row/per-width dispatch bugs)."""
     import pyspark.sql.functions as F
 
     kind, arg = _parse(field["transform"])
     src = F.col(field["source"])
-    stype = field.get("source_type")
+    stype = field["source_type"]
     if kind == "identity":
         return src
     if kind == "bucket":
@@ -280,21 +267,9 @@ def transform_expr(field: dict) -> Column:
             return (
                 src.cast("long") - F.pmod(src.cast("long"), F.lit(arg))
             ).cast("string")
-        if stype is not None:
-            return F.substring(src.cast("string"), 1, arg)
-        # legacy spec (no recorded type): preserve the historical per-row
-        # dispatch so files already routed by it keep pruning correctly
-        return F.when(
-            src.cast("string").rlike("^-?[0-9]+$"),
-            (src.cast("long") - F.pmod(src.cast("long"), F.lit(arg))).cast(
-                "string"
-            ),
-        ).otherwise(F.substring(src.cast("string"), 1, arg))
+        return F.substring(src.cast("string"), 1, arg)
     fmt, _ = _TEMPORAL_FMT[kind]
     return F.date_format(src, fmt)
-
-
-_DIGITS = re.compile(r"^-?[0-9]+$")
 
 
 def apply_transform(field: dict, lit):
@@ -308,7 +283,7 @@ def apply_transform(field: dict, lit):
     kind, arg = _parse(field["transform"])
     if lit is None:
         return None
-    stype = field.get("source_type")
+    stype = field["source_type"]
     if kind == "identity":
         return lit
     if kind == "bucket":
@@ -318,17 +293,6 @@ def apply_transform(field: dict, lit):
                     f"bucket over {stype} column expects an int literal"
                 )
             h = murmur3_long(lit)  # writer casts integrals to long
-        elif stype is None and isinstance(lit, int) and not isinstance(
-            lit, bool
-        ):
-            # legacy spec: the column may be int (writer hashed 32-bit) or
-            # bigint (64-bit) — the literal alone cannot tell which hash the
-            # writer used, so pruning on it would be a guess (ADVICE r5)
-            raise TypeError(
-                "bucket over a legacy spec with an integer literal is "
-                "ambiguous (hashInt vs hashLong) — re-run set_partition_spec "
-                "to stamp source_type"
-            )
         else:
             h = spark_hash(lit)
         return ((h % arg) + arg) % arg
@@ -343,24 +307,15 @@ def apply_transform(field: dict, lit):
             return lit - (lit % arg)  # python % already floors toward -inf
         if stype == "string":
             return str(lit)[:arg]
-        if stype is not None:
-            # stamped but non-truncatable (pre-r7 spec on float/double/
-            # decimal/...): the writer truncated Spark's string rendering,
-            # which python's str() does not reproduce (1e20 → '1.0E20' vs
-            # '1e+20') — even equality pruning would be a guess. Keep the
-            # file (ADVICE r6).
-            raise TypeError(
-                f"truncate over {stype} column is not plannable; "
-                "truncate specs support integral and string sources only"
-            )
-        # legacy spec: mirror the writer's per-row dispatch EXACTLY — a
-        # digit-string value was routed numerically, so a digit-string
-        # literal must floor numerically too, not take its prefix
-        if isinstance(lit, int):
-            return lit - (lit % arg)
-        if isinstance(lit, str) and _DIGITS.match(lit):
-            return str(int(lit) - (int(lit) % arg))
-        return str(lit)[:arg]
+        # non-truncatable source (a pre-r7 spec on float/double/
+        # decimal/...): the writer truncated Spark's string rendering,
+        # which python's str() does not reproduce (1e20 → '1.0E20' vs
+        # '1e+20') — even equality pruning would be a guess. Keep the
+        # file (ADVICE r6).
+        raise TypeError(
+            f"truncate over {stype} column is not plannable; "
+            "truncate specs support integral and string sources only"
+        )
     _, strf = _TEMPORAL_FMT[kind]
     if isinstance(lit, (datetime.datetime, datetime.date)):
         return lit.strftime(strf)
@@ -506,7 +461,6 @@ def set_partition_spec(
     by their LOGICAL names; pass ``[]`` to unpartition future writes."""
     from web_analytics_on_aws_spark.sources.evolution import translate_keys
     from web_analytics_on_aws_spark.sources.snapshots import (
-        _hydrate_manifest,
         _manifest_deletes,
         _manifest_eq_deletes,
         _publish,
@@ -517,58 +471,42 @@ def set_partition_spec(
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    # head-first: mapped tables stamp source_type from the schema block
-    # and publish an empty delta — a spec change on a sharded 1M-file
-    # table is O(head); only the unmapped type probe needs the file list
+    # head-first: source types come from the schema block and the commit
+    # publishes an empty delta — a spec change on a sharded 1M-file table
+    # is O(head)
     m = _read_manifest_head(table, cur)
-    sch = m.get("schema")
-    if sch is None:
-        m = _hydrate_manifest(table, m)
+    sch = m["schema"]
     # static type dispatch (ADVICE r5): every spec field records its source
     # column's Spark type at spec time, so writer expression and planner
     # literal-transform agree by construction — never per-row / per-literal
-    # guessing. Resolved from the column-mapping schema when present, else
-    # from the live file schema; a fileless unmapped table gets no stamp
-    # (its fields prune under the conservative legacy rules).
-    types: dict[str, str] = {}
-    if sch is not None:
-        types = {f["phys"]: f["type"] for f in sch["fields"]}
-    elif m.get("files"):
-        types = dict(
-            spark.read.option("mergeSchema", "true")
-            .parquet(*m["files"])
-            .dtypes
-        )
+    # guessing.
+    types = {f["phys"]: f["type"] for f in sch["fields"]}
     fields = []
     for source, transform in spec:
         _parse(transform)  # validate early
-        phys = (
-            translate_keys(sch, [source], "set_partition_spec")[0]
-            if sch is not None
-            else source
+        phys = translate_keys(sch, [source], "set_partition_spec")[0]
+        # truncate is declared on integral/string sources only: for any
+        # other type the write expression would truncate the STRING
+        # rendering, whose lexical order disagrees with the source order —
+        # silently wrong range pruning (ADVICE r6). Iceberg's decimal
+        # truncate (unscaled-value arithmetic) is a different transform
+        # this engine does not implement.
+        if (
+            _parse(transform)[0] == "truncate"
+            and types[phys] not in _TRUNCATABLE
+        ):
+            raise ValueError(
+                f"truncate transform on {source!r} ({types[phys]}) is "
+                "not supported: integral and string source columns only"
+            )
+        fields.append(
+            {
+                "name": _default_name(phys, transform),
+                "source": phys,
+                "transform": transform,
+                "source_type": types[phys],
+            }
         )
-        field = {
-            "name": _default_name(phys, transform),
-            "source": phys,
-            "transform": transform,
-        }
-        if phys in types:
-            field["source_type"] = types[phys]
-            # truncate is declared on integral/string sources only: for
-            # any other type the write expression would truncate the
-            # STRING rendering, whose lexical order disagrees with the
-            # source order — silently wrong range pruning (ADVICE r6).
-            # Iceberg's decimal truncate (unscaled-value arithmetic) is a
-            # different transform this engine does not implement.
-            if (
-                _parse(transform)[0] == "truncate"
-                and types[phys] not in _TRUNCATABLE
-            ):
-                raise ValueError(
-                    f"truncate transform on {source!r} ({types[phys]}) is "
-                    "not supported: integral and string source columns only"
-                )
-        fields.append(field)
     block = dict(m.get(PART_KEY) or {"specs": {}, "current": 0})
     specs = dict(block["specs"])
     next_id = 1 + max((int(k) for k in specs), default=0)
@@ -1148,7 +1086,7 @@ def partition_value_census(
         # table stores mixed physical widths that mergeSchema refuses to
         # union (int vs long) but the explicit-schema scan up-casts
         scanned = (
-            _scan_files(spark, fallback, m.get("schema"))
+            _scan_files(spark, fallback, m["schema"])
             .groupBy(transform_expr(fld).cast("string").alias("__v"))
             .agg(F.count("*").alias("__n"))
             .collect()

@@ -291,7 +291,7 @@ def _clone_manifest(src: str, dst: str, op: str) -> int:
         # absolute paths published above — ADVICE r5: a branch of a
         # partitioned table must keep its spec, or branch appends go
         # unpartitioned and tuple pruning is lost)
-        schema=m.get("schema"),
+        schema=m["schema"],
         partitioning=m.get("partitioning"),
         file_partitions={
             os.path.abspath(f): fp[f] for f in m["files"] if f in fp
@@ -535,10 +535,10 @@ def fast_forward(table: str, name: str) -> int:
         # the branch may have evolved its schema OR its partition spec (or
         # the branch predates a main-side evolution that never happened —
         # base==cur guarantees main hasn't moved): adopt the branch head's
-        # blocks verbatim; None explicitly clears. Partition tuples re-key
+        # blocks verbatim (None clears a spec). Partition tuples re-key
         # to the adopted paths so pruning survives the fast-forward
         # (ADVICE r5).
-        schema=bh.get("schema"),
+        schema=bh["schema"],
         partitioning=bh.get("partitioning"),
         file_partitions={
             _adopt(f): bfp[f] for f in bh["files"] if f in bfp
@@ -570,17 +570,15 @@ def commit_append_wap(df: DataFrame, table: str, wap_id: str) -> str:
         raise ValueError(f"wap id {wap_id!r} already staged on {table}")
     # column-mapped tables store physical names (sources/evolution.py) —
     # translate the staged payload exactly like commit_append
+    from web_analytics_on_aws_spark.sources.evolution import to_physical
     from web_analytics_on_aws_spark.sources.snapshots import (
         _logical,
-        _read_manifest,
+        _scan_files,
     )
 
-    m_head = _read_manifest(table, current_version(table))
-    sch = m_head.get("schema")
-    if sch is not None:
-        from web_analytics_on_aws_spark.sources.evolution import to_physical
-
-        df = to_physical(df, sch, "commit_append_wap")
+    m_head = _read_manifest_head(table, current_version(table))
+    sch = m_head["schema"]
+    df = to_physical(df, sch, "commit_append_wap")
     # hidden partitioning: a staged append routes through the current spec
     # exactly like commit_append — otherwise publishing a WAP batch would
     # silently leave untupled (unprunable) files in a partitioned table
@@ -613,7 +611,7 @@ def commit_append_wap(df: DataFrame, table: str, wap_id: str) -> str:
     cons = table_constraints(table)
     if cons:
         check_constraints(
-            _logical(df.sparkSession.read.parquet(*new_files), sch), cons
+            _logical(_scan_files(df.sparkSession, new_files, sch), sch), cons
         )
     from web_analytics_on_aws_spark.sources.snapshots import (
         collect_file_stats,
@@ -661,13 +659,12 @@ def read_wap(spark: SparkSession, table: str, wap_id: str) -> DataFrame:
     staged files are new and outside any existing delete's scope."""
     from web_analytics_on_aws_spark.sources.snapshots import (
         _logical,
-        _read_manifest,
         _scan_files,
     )
 
     w = _read_wap_manifest(table, wap_id)
     head = read_snapshot(spark, table)
-    sch = _read_manifest(table, current_version(table)).get("schema")
+    sch = _read_manifest_head(table, current_version(table))["schema"]
     staged = _logical(_scan_files(spark, w["new_files"], sch), sch)
     return head.unionByName(staged, allowMissingColumns=True)
 
@@ -698,12 +695,15 @@ def publish_wap(
                     "was staged; pass spark= to re-validate the staged "
                     "files before publish"
                 )
-            from web_analytics_on_aws_spark.sources.snapshots import _logical
+            from web_analytics_on_aws_spark.sources.snapshots import (
+                _logical,
+                _scan_files,
+            )
 
             check_constraints(
                 _logical(
-                    spark.read.parquet(*w["new_files"]),
-                    prev_m.get("schema"),
+                    _scan_files(spark, w["new_files"], prev_m["schema"]),
+                    prev_m["schema"],
                 ),
                 head_cons,
             )

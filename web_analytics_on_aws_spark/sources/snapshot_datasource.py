@@ -20,8 +20,9 @@ Scan planning is Iceberg-shaped, in miniature:
   Spark, which re-applies it post-scan — skipping is a pure optimization,
   never a correctness dependency;
 - one `InputPartition` per surviving file; `read` streams Arrow record
-  batches (zero row-by-row Python), padding net-new columns with nulls so
-  additive schema evolution reads like `read_snapshot(mergeSchema=True)`.
+  batches (zero row-by-row Python) under the head's schema block, padding
+  columns a file predates with nulls and up-casting widened ones, so
+  schema evolution reads exactly like `read_snapshot`.
 
 Sharp edge (Spark-level, pinned in tests/test_manifest_groups.py::
 test_snapshot_datasource_reuse_sharp_edge): the Python DataSource layer
@@ -58,8 +59,6 @@ from pyspark.sql.datasource import (
 )
 
 from web_analytics_on_aws_spark.sources.snapshots import (
-    _hydrate_manifest,
-    _read_manifest,
     _read_manifest_head,
     current_version,
 )
@@ -130,10 +129,6 @@ def _resolve_head(options: dict) -> dict:
     return _read_manifest_head(table, v)
 
 
-def _resolve_manifest(options: dict) -> dict:
-    return _hydrate_manifest(options["path"], _resolve_head(options))
-
-
 def _dv_map(table: str, head: dict) -> dict[str, tuple]:
     """{file: sorted deleted positions} from the head's position-delete
     sidecars (merge-on-read `delete_where_mor`), folded on the driver —
@@ -154,104 +149,17 @@ def _dv_map(table: str, head: dict) -> dict[str, tuple]:
     return {f: tuple(sorted(ps)) for f, ps in dv.items()}
 
 
-def _unified_arrow_schema(files: list[str], m: dict | None = None):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # manifest fast path: every file's column types were recorded at
-    # commit time (snapshots._file_types) — when they're all present and
-    # agree per column, the union schema is a manifest fold, not an
-    # O(files) pq.read_schema walk at every reader construction. Any
-    # disagreement (mixed physical types, legacy files) falls back to the
-    # authoritative file walk.
-    if m is not None and files:
-        fs = m.get("file_stats", {})
-        order: list[str] = []
-        types: dict[str, str] = {}
-        ok = True
-        for f in files:
-            t = (fs.get(f) or {}).get("types")
-            if not t:
-                ok = False
-                break
-            for name, ddl in t.items():
-                if name not in types:
-                    types[name] = ddl
-                    order.append(name)
-                elif types[name] != ddl:
-                    ok = False
-                    break
-            if not ok:
-                break
-        if ok:
-            try:
-                return pa.schema(
-                    [
-                        pa.field(n, _arrow_type(types[n]), nullable=True)
-                        for n in order
-                    ]
-                )
-            except ValueError:
-                pass  # unconvertible recorded type — fall through
-    unified = pa.unify_schemas(
-        [pq.read_schema(f) for f in files], promote_options="permissive"
-    )
-    # evolution means any column may be absent (null) in older files — the
-    # read schema must be nullable even where every writer declared required
-    return pa.schema([f.with_nullable(True) for f in unified])
-
-
-def _segments_arrow_schema(head: dict):
-    """Union arrow schema of an UNMAPPED table resolved from the
-    head's segment summaries alone (each records its members' merged
-    column types — snapshots._summarize_segment): O(segments), zero
-    segment opens, zero footer reads. Returns None when any segment
-    predates the types summary or segments disagree on a column's type —
-    the caller falls back to hydration + the authoritative file walk
-    (VERDICT r8 #2: that fallback used to be the DEFAULT, an O(files)
-    hydration on every plan of a never-mapped 1M-file table)."""
-    import pyarrow as pa
-
-    order: list[str] = []
-    types: dict[str, str] = {}
-    # grouped heads: each group summary carries its members' merged types
-    # (snapshots._summarize_group), so the union stays O(head) — a group
-    # without a types block (member disagreement) fails over to hydration
-    for s in head.get("groups", []) + head.get("segments", []):
-        t = s.get("types")
-        if not t:
-            return None
-        for name, ddl in t.items():
-            if name not in types:
-                types[name] = ddl
-                order.append(name)
-            elif types[name] != ddl:
-                return None
-    if not order:
-        return None
-    try:
-        return pa.schema(
-            [pa.field(n, _arrow_type(types[n]), nullable=True) for n in order]
-        )
-    except ValueError:
-        return None
-
-
-def _mapped_arrow_schema(m: dict):
-    """(arrow schema under LOGICAL names, {logical: physical}) for a
-    manifest. Unmapped tables return the plain file-union schema and an
-    empty mapping. Mapped tables render each field at its DECLARED type —
+def _logical_arrow_schema(m: dict):
+    """(arrow schema under LOGICAL names, {logical: physical}) from a
+    manifest head's schema block. Each field renders at its DECLARED type —
     the manifest schema is the contract, and after evolve_widen_column
     files legitimately store a narrower physical type than the table
     declares (read() casts each file's arrow column up to the declared
     type, mirroring snapshots._scan_files on the JVM path)."""
-    sch = m.get("schema")
-    if sch is None:
-        return _unified_arrow_schema(m["files"], m), {}
     import pyarrow as pa
 
     fields, mapping = [], {}
-    for f in sch["fields"]:
+    for f in m["schema"]["fields"]:
         mapping[f["name"]] = f["phys"]
         fields.append(pa.field(f["name"], _arrow_type(f["type"]), nullable=True))
     return pa.schema(fields), mapping
@@ -276,12 +184,15 @@ def _arrow_type(ddl: str):
     """Spark simpleString → arrow type WITHOUT a SparkContext — the
     DataSource's ``schema()`` runs during planning, where
     ``_parse_datatype_string`` would raise SESSION_OR_CONTEXT_NOT_EXISTS.
-    Covers every type df.dtypes can emit for parquet-backed tables."""
+    Covers every type df.dtypes can emit for parquet-backed tables. Type
+    keywords match case-insensitively; struct field names keep their case
+    (the file's struct column must cast onto the result)."""
     import re
 
     import pyarrow as pa
 
-    s = ddl.strip().lower()
+    s = ddl.strip()
+    low = s.lower()
     prim = {
         "boolean": pa.bool_(), "tinyint": pa.int8(), "byte": pa.int8(),
         "smallint": pa.int16(), "short": pa.int16(), "int": pa.int32(),
@@ -292,19 +203,20 @@ def _arrow_type(ddl: str):
         "timestamp_ltz": pa.timestamp("us", tz="UTC"),
         "timestamp_ntz": pa.timestamp("us"),
     }
-    if s in prim:
-        return prim[s]
-    m = re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", s)
+    if low in prim:
+        return prim[low]
+    m = re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", low)
     if m:
         return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    m = re.fullmatch(r"array<(.+)>", s, re.DOTALL)
+    flags = re.DOTALL | re.IGNORECASE
+    m = re.fullmatch(r"array<(.+)>", s, flags)
     if m:
         return pa.list_(_arrow_type(m.group(1)))
-    m = re.fullmatch(r"map<(.+)>", s, re.DOTALL)
+    m = re.fullmatch(r"map<(.+)>", s, flags)
     if m:
         k, v = _split_top(m.group(1))
         return pa.map_(_arrow_type(k), _arrow_type(v))
-    m = re.fullmatch(r"struct<(.+)>", s, re.DOTALL)
+    m = re.fullmatch(r"struct<(.+)>", s, flags)
     if m:
         fields = []
         for part in _split_top(m.group(1)):
@@ -542,10 +454,7 @@ class SnapshotReader(DataSourceReader):
         # LOGICAL names; files store PHYSICAL names — translate at the
         # segment check, the footer-stats check, the bloom probe, and the
         # batch read
-        sch = head.get("schema")
-        self._map = (
-            {f["name"]: f["phys"] for f in sch["fields"]} if sch else {}
-        )
+        self._map = {f["name"]: f["phys"] for f in head["schema"]["fields"]}
         # per-file partition tuples + manifest column stats: filled in
         # partitions() from the PREDICATE-SURVIVING segments only — the
         # whole point of the manifest-list split is that planning never
@@ -567,11 +476,11 @@ class SnapshotReader(DataSourceReader):
 
         self._bloom = load_bloom_index(table)
         # Resolve the OUTPUT arrow schema once, on the driver: honor the
-        # schema Spark hands the reader (explicit .schema(...) / future
-        # column pruning), falling back to the manifest union. Serialized
-        # into the pickled reader → each task reuses it instead of
-        # re-reading every file's footer per partition (which was O(files²)
-        # metadata reads per scan).
+        # schema Spark hands the reader (explicit .schema(...) / the
+        # ``columns`` option), falling back to the head's schema block.
+        # Serialized into the pickled reader → each task reuses it instead
+        # of re-reading every file's footer per partition (which was
+        # O(files²) metadata reads per scan).
         want = None
         if schema is not None and len(schema.fields) > 0:
             try:
@@ -580,16 +489,8 @@ class SnapshotReader(DataSourceReader):
                 want = to_arrow_schema(schema)
             except Exception:
                 want = None
-        if want is None and sch is None:
-            # unmapped table: the head's segment summaries carry merged
-            # member types — O(segments), no hydration
-            want = _segments_arrow_schema(head)
         if want is None:
-            # no usable engine-provided schema and no summary types (ns
-            # timestamps / mixed physical types): fall back to the
-            # manifest union — hydrates on unmapped tables
-            m = _hydrate_manifest(table, head) if sch is None else head
-            want, _ = _mapped_arrow_schema(m)
+            want, _ = _logical_arrow_schema(head)
         self._want = want
 
     def pushFilters(self, filters: list[Filter]):
@@ -951,8 +852,8 @@ class SnapshotReader(DataSourceReader):
         # those — the v2 sequence rule already resolved)
         if partition.eq_deletes:
             table = _apply_eq_deletes_arrow(table, partition.eq_deletes)
-        # additive evolution: pad columns this file predates with nulls,
-        # project to the unified column order
+        # evolution: pad columns this file predates with nulls, up-cast
+        # widened ones, project to the schema's column order
         cols = []
         for field in want:
             p = phys[field.name]
@@ -1002,25 +903,9 @@ class SnapshotDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        # mapped tables resolve from the head's schema block alone (O(1));
-        # unmapped tables resolve from the segment summaries' merged types
-        # (O(segments), VERDICT r8 #2) — hydration of the file maps is the
-        # last-resort fallback for ns timestamps or mixed physical types
-        head = _resolve_head(self.options)
-        full = None
-        if head.get("schema") is None:
-            arrow = _segments_arrow_schema(head)
-            if arrow is not None:
-                full = from_arrow_schema(arrow)
-        if full is None:
-            m = (
-                head
-                if head.get("schema") is not None
-                else _hydrate_manifest(self.options["path"], head)
-            )
-            arrow, _ = _mapped_arrow_schema(m)
-            full = from_arrow_schema(arrow)
-        return self._project_columns(full)
+        # resolved from the head's schema block alone (O(1))
+        arrow, _ = _logical_arrow_schema(_resolve_head(self.options))
+        return self._project_columns(from_arrow_schema(arrow))
 
     def _project_columns(self, full):
         """Honor an explicit ``columns`` option (comma-separated LOGICAL

@@ -352,9 +352,8 @@ def _require_no_deletes(table: str, m: dict, op: str) -> None:
         )
 
 
-# sentinel: "carry the predecessor's schema forward" — distinct from None,
-# which restore_version passes explicitly to CLEAR the mapping when
-# restoring a pre-evolution version
+# sentinel: "carry the predecessor's block forward" — distinct from None,
+# which clears an optional block (partition spec, sort order)
 _CARRY_SCHEMA = object()
 
 
@@ -388,6 +387,23 @@ def _publish(
     materialized) — the commit path of a 1M-file table then reads and
     writes O(changed) metadata, the VERDICT r7 #1 scale contract."""
     os.makedirs(os.path.join(table, MANIFEST_DIR), exist_ok=True)
+    # No commit publishes a data file holding no rows: the schema lives in
+    # the head, so such a file carries nothing a reader needs, and it would
+    # have no partition tuple to prune on. The footer stats every data
+    # commit passes name them — no extra file open, no Spark job.
+    empty = {
+        f for f, st in (file_stats or {}).items() if int(st["rows"]) == 0
+    }
+    if empty:
+        if files is not None:
+            files = [f for f in files if f not in empty]
+        if new_files is not None:
+            new_files = [f for f in new_files if f not in empty]
+        file_stats = {f: st for f, st in file_stats.items() if f not in empty}
+        if file_partitions:
+            file_partitions = {
+                f: t for f, t in file_partitions.items() if f not in empty
+            }
     body = {
         "version": version,
         "operation": op,
@@ -456,10 +472,8 @@ def _publish(
     body["committed_at"] = max(body["committed_at"], prev_committed + 1e-3)
     # Column-mapping schema rides the manifest like constraints/txns:
     # carried forward unchanged unless the commit explicitly replaces it
-    # (evolve_*) or clears it (restore to a pre-evolution version).
-    eff_schema = prev_schema if schema is _CARRY_SCHEMA else schema
-    if eff_schema:
-        body["schema"] = eff_schema
+    # (the first commit, evolve_*, restore, clone).
+    body["schema"] = prev_schema if schema is _CARRY_SCHEMA else schema
     # Hidden-partitioning metadata rides the manifest the same way: the
     # spec block carries forward unless explicitly replaced
     # (set_partition_spec / restore), and per-file partition tuples carry
@@ -681,29 +695,6 @@ def _summarize_segment(rel: str, entries: dict[str, dict]) -> dict:
     }
     if cols:
         out["cols"] = cols
-    # merged member column TYPES (first-seen order): when every member
-    # recorded its types and they agree per column, the summary carries the
-    # segment's union schema — an UNMAPPED sharded table then resolves its
-    # union-of-schemas from the head alone (VERDICT r8 #2: the probe used
-    # to hydrate O(files) on every plan of a never-mapped table). Any
-    # disagreement (mixed physical types across members) drops the block;
-    # readers fall back to the authoritative hydrated walk.
-    types: dict[str, str] | None = {}
-    for e in entries.values():
-        t = (e.get("stats") or {}).get("types")
-        if not t:
-            types = None
-            break
-        for cname, ddl in t.items():
-            if cname not in types:
-                types[cname] = ddl
-            elif types[cname] != ddl:
-                types = None
-                break
-        if types is None:
-            break
-    if types:
-        out["types"] = types
     tuples = [e.get("part") for e in entries.values()]
     if all(t is not None for t in tuples):
         spec_ids = {t["spec_id"] for t in tuples}
@@ -744,7 +735,7 @@ def _summarize_segment(rel: str, entries: dict[str, dict]) -> dict:
 #   zero reads; only dirty-hit groups dissolve back into the segment pool
 #   for per-segment reuse evaluation;
 # - planning prunes at the group layer FIRST (merged column bounds /
-#   partition values / types ride the group summary, same shape as a
+#   partition values ride the group summary, same shape as a
 #   segment summary), opening only predicate-intersecting groups, then
 #   prunes their member segments — two levels of manifest skip;
 # - group summaries carry exact n/rows/bytes/stats_n sums, so head-only
@@ -794,7 +785,7 @@ def _summarize_group(rel: str, segs: list[dict]) -> dict:
     """The head's entry for one group: exact count/byte/row sums over the
     member summaries, the merged member path range, and — under the same
     every-member-or-nothing soundness rule as ``_summarize_segment`` —
-    merged column bounds, union types, and partition value sets, so the
+    merged column bounds and partition value sets, so the
     planner can prune whole groups without opening them."""
     out = {
         "path": rel,
@@ -828,20 +819,6 @@ def _summarize_group(rel: str, segs: list[dict]) -> dict:
                 del cols[c]
     if cols:
         out["cols"] = cols
-    types: dict[str, str] | None = {}
-    for s in segs:
-        t = s.get("types")
-        if not t:
-            types = None
-            break
-        for cname, ddl in t.items():
-            if types.setdefault(cname, ddl) != ddl:
-                types = None
-                break
-        if types is None:
-            break
-    if types:
-        out["types"] = types
     spec_ids = {s.get("part_spec") for s in segs}
     if len(spec_ids) == 1 and None not in spec_ids:
         fields = set(segs[0].get("parts", {}))
@@ -1218,11 +1195,6 @@ def _stats_for_file(p: str) -> dict:
     stay on the cheap local-FS calls."""
     import pyarrow.parquet as pq
 
-    delay = os.environ.get("SPARK_GRAFT_STATS_FOOTER_DELAY_MS")
-    if delay:
-        # probe-only hook (tools/stats_collect_probe.py): simulate the
-        # per-footer round-trip latency of object storage on a local box
-        time.sleep(float(delay) / 1000.0)
     remote = _fs_for_path(p)
     if remote is not None:
         fsys, rel = remote
@@ -1271,7 +1243,6 @@ def _stats_for_file(p: str) -> dict:
         "rows": meta.num_rows,
         "bytes": size,
         "cols": cols,
-        "types": _file_types(p),
     }
 
 
@@ -1282,12 +1253,10 @@ def _stats_for_file(p: str) -> dict:
 # round-trip, so serial collection of a 600-file commit is 12-30 s of
 # driver stall and the crossover sits around ~64 files. Dispatch on the
 # path scheme; SPARK_GRAFT_STATS_DISTRIBUTE=always/never overrides.
-# NOTE: in THIS environment the manifest layer itself is local-FS (os.link
-# CAS publishes, os.walk listings), so the scheme branch is forward-
-# looking design and the object-store regime is MODELED, not exercised —
-# tools/stats_collect_probe.py measures it by injecting the per-footer
-# round-trip latency (the env hook below), which in local mode reaches
-# the executor python workers through the inherited process env.
+# NOTE: the manifest layer itself is local-FS (os.link CAS publishes,
+# os.walk listings), so the scheme branch is forward-looking design and
+# the object-store regime is MODELED, not exercised — SCALE.md records the
+# measured contrast with an injected per-footer round-trip latency.
 _STATS_DISTRIBUTE_MIN = 64  # remote (object-store) paths
 _STATS_DISTRIBUTE_LOCAL_MIN = 4096  # local paths: only huge backfills
 _REMOTE_SCHEMES = (
@@ -1337,8 +1306,8 @@ def collect_file_stats(
     the footer reads out to the executors via ``mapInPandas`` when a
     session is passed — a 10k-file backfill is then ~10k parallel
     ~20-50 ms reads instead of minutes of serial driver stall per commit
-    (see ``_should_distribute_stats`` for the crossover math;
-    ``tools/stats_collect_probe.py`` for the measured contrast). The
+    (see ``_should_distribute_stats`` for the crossover math; SCALE.md
+    for the measured contrast). The
     driver only merges the per-file entries into the manifest."""
     if spark is not None and _should_distribute_stats(paths):
         import math
@@ -1369,50 +1338,17 @@ def collect_file_stats(
     return {p: _stats_for_file(p) for p in paths}
 
 
-def _file_types(path: str) -> dict[str, str] | None:
-    """{column: spark simpleString} for one parquet file, from its arrow
-    schema — recorded in file_stats so the snapshot DataSource can resolve
-    an unmapped table's union schema from the MANIFEST instead of a
-    pq.read_schema walk over every file (O(files) metadata reads at every
-    reader construction). None when any type doesn't convert (the reader
-    falls back to the file walk — conservative)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        from pyspark.sql.pandas.types import from_arrow_type
-
-        remote = _fs_for_path(path)
-        if remote is not None:
-            sch = pq.read_schema(remote[1], filesystem=remote[0])
-        else:
-            sch = pq.read_schema(path)
-        for f in sch:
-            # ns timestamps don't round-trip through simpleString (the
-            # reconstruction would render us where the file walk renders
-            # ns) — leave such files to the authoritative walk
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
-                return None
-        return {
-            f.name: from_arrow_type(f.type).simpleString() for f in sch
-        }
-    except Exception:
-        return None
-
-
-def _scan_files(spark: SparkSession, files: list[str], sch: dict | None):
+def _scan_files(spark: SparkSession, files: list[str], sch: dict):
     """Scan data files under the manifest's column-mapping schema.
 
-    Mapped tables read with an EXPLICIT physical schema instead of
-    mergeSchema: files missing an added column null-fill it, dropped
-    physical columns are not decoded, and — the point of evolve_widen_
-    column — files written before a type widening are up-cast inside the
-    vectorized parquet reader (int→long, float→double, decimal precision
-    growth are the reader's supported promotions; a mergeSchema union
-    refuses to merge int with long at all). Unmapped tables keep the
-    union-of-schemas read (additive evolution via mergeSchema)."""
-    if sch is None:
-        return spark.read.option("mergeSchema", "true").parquet(*files)
+    The read takes an EXPLICIT physical schema instead of inferring one:
+    files missing an added column null-fill it, dropped physical columns
+    are not decoded, and — the point of evolve_widen_column — files
+    written before a type widening are up-cast inside the vectorized
+    parquet reader (int→long, float→double, decimal precision growth are
+    the reader's supported promotions; a mergeSchema union refuses to
+    merge int with long at all). An empty file list reads as an empty
+    frame of that schema."""
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
     struct = StructType(
@@ -1447,29 +1383,17 @@ def set_sort_order(spark: SparkSession, table: str, order: list[str]) -> int:
     cur = current_version(table)
     if cur is None:
         raise FileNotFoundError(f"no snapshots at {table}")
-    # head-first: a metadata-only commit on a MAPPED sharded table never
-    # touches the per-file maps (column check from the schema block,
-    # publish as an empty delta); only an unmapped table's column check
-    # needs the file union
+    # head-first: a metadata-only commit never touches the per-file maps
+    # (column check from the schema block, publish as an empty delta)
     m = _read_manifest_head(table, cur)
-    sch = m.get("schema")
     if order:
-        if sch is not None:
-            from web_analytics_on_aws_spark.sources.evolution import (
-                translate_keys,
-            )
+        from web_analytics_on_aws_spark.sources.evolution import (
+            translate_keys,
+        )
 
-            cols = translate_keys(sch, list(order), "set_sort_order")
-        else:
-            m = _hydrate_manifest(table, m)
-            cols = list(order)
-            have = set(_table_columns(spark, m)) if m["files"] else set(cols)
-            missing = sorted(set(cols) - have)
-            if missing:
-                raise ValueError(
-                    f"set_sort_order: columns {missing} not in table"
-                )
-        block = {"cols": cols}
+        block = {
+            "cols": translate_keys(m["schema"], list(order), "set_sort_order")
+        }
     else:
         block = None
     _publish(
@@ -1539,12 +1463,17 @@ def commit_append(
     # HEAD-only read: everything an append needs (schema, spec, sort
     # order, constraints) rides the head — on a sharded manifest the
     # append path never materializes the per-file maps at all.
-    m_prev = _read_manifest_head(table, cur) if cur is not None else {}
-    sch = m_prev.get("schema")
-    if sch is not None:
-        from web_analytics_on_aws_spark.sources.evolution import to_physical
+    # The first commit creates the table: its schema block is the identity
+    # mapping of df (evolution.identity_schema).
+    from web_analytics_on_aws_spark.sources.evolution import (
+        identity_schema,
+        to_physical,
+    )
 
-        df = to_physical(df, sch, "commit_append")
+    creating = cur is None
+    m_prev = {} if creating else _read_manifest_head(table, cur)
+    sch = identity_schema(df) if creating else m_prev["schema"]
+    df = to_physical(df, sch, "commit_append")
     # hidden partitioning (sources/partitioning.py): when a spec is
     # current, route rows through its transforms — one leaf per partition
     # value, tuple recorded in the manifest for scan-planning pruning
@@ -1575,7 +1504,7 @@ def commit_append(
             # constraints are expressed on LOGICAL names — view the
             # written (physical) bytes through the mapping first
             check_constraints(
-                _logical(df.sparkSession.read.parquet(*new_files), sch),
+                _logical(_scan_files(df.sparkSession, new_files, sch), sch),
                 cons,
             )
         validated = cons
@@ -1587,6 +1516,12 @@ def commit_append(
     # are already durable — only the manifest pointer moves).
     for _ in range(16):
         prev_m = _read_manifest_head(table, cur) if cur is not None else {}
+        if creating and prev_m and prev_m["schema"] != sch:
+            # a racing writer created the table under a different schema
+            # than the one these bytes were written for
+            raise CommitConflict(
+                f"{table} was created concurrently with another schema"
+            )
         # a racing set_constraints may have landed since validation —
         # re-validate under the head's CURRENT constraint set before
         # publishing on top of it (no-op when unchanged)
@@ -1604,6 +1539,7 @@ def commit_append(
                 table, version, files_arg, "append", txn=txn,
                 delete_files=_manifest_deletes(prev_m),
                 eq_deletes=_manifest_eq_deletes(prev_m),
+                schema=_CARRY_SCHEMA if prev_m else sch,
                 file_partitions=fparts,
                 file_stats=new_stats,
                 new_files=new_files,
@@ -1632,13 +1568,15 @@ def commit_overwrite(
         last = last_committed_batch(table, txn[0])
         if last is not None and int(txn[1]) <= last:
             return current_version(table)
-    cur = current_version(table)
-    m_prev = _read_manifest(table, cur) if cur is not None else {}
-    sch = m_prev.get("schema")
-    if sch is not None:
-        from web_analytics_on_aws_spark.sources.evolution import to_physical
+    from web_analytics_on_aws_spark.sources.evolution import (
+        identity_schema,
+        to_physical,
+    )
 
-        df = to_physical(df, sch, "commit_overwrite")
+    cur = current_version(table)
+    m_prev = _read_manifest_head(table, cur) if cur is not None else {}
+    sch = m_prev["schema"] if cur is not None else identity_schema(df)
+    df = to_physical(df, sch, "commit_overwrite")
     # hidden partitioning routes overwrites exactly like appends (without
     # this, one overwrite would silently de-partition the table)
     pblock = m_prev.get("partitioning") or {}
@@ -1659,11 +1597,13 @@ def commit_overwrite(
     if cons:
         # validate the written bytes (see commit_append)
         check_constraints(
-            _logical(df.sparkSession.read.parquet(*new_files), sch), cons
+            _logical(_scan_files(df.sparkSession, new_files, sch), sch), cons
         )
     version = (current_version(table) or 0) + 1
+    # the new contents carry the schema their bytes were written under
     _publish(
         table, version, new_files, "overwrite", txn=txn,
+        schema=sch,
         file_partitions=fparts,
         file_stats=collect_file_stats(new_files, df.sparkSession),
     )
@@ -1827,12 +1767,11 @@ def read_snapshot(
     files = m["files"]
     # column mapping (sources/evolution.py): data files store PHYSICAL
     # names; the projection to THIS version's logical schema is the last
-    # step, so every version time-travels under its own column names.
-    # Unmapped tables read mergeSchema (additive union); mapped tables
-    # read under the explicit physical schema (_scan_files) — which also
-    # renders each version's WIDENED types (evolve_widen_column) without
-    # touching old files.
-    sch = m.get("schema")
+    # step, so every version time-travels under its own column names. The
+    # scan reads under the explicit physical schema (_scan_files), which
+    # also renders each version's WIDENED types (evolve_widen_column)
+    # without touching old files.
+    sch = m["schema"]
     df = _scan_files(spark, files, sch)
     dvs, eqs = _manifest_deletes(m), _manifest_eq_deletes(m)
     if not dvs and not eqs:
@@ -1853,11 +1792,9 @@ def read_snapshot(
     return _logical(scan.select(*cols), sch)
 
 
-def _logical(df: DataFrame, sch: dict | None, keep: tuple = ()) -> DataFrame:
-    """Physical→logical projection when a column-mapping schema is present
-    (no-op otherwise) — see sources/evolution.py."""
-    if sch is None:
-        return df
+def _logical(df: DataFrame, sch: dict, keep: tuple = ()) -> DataFrame:
+    """Physical→logical projection under a column-mapping schema — see
+    sources/evolution.py."""
     from web_analytics_on_aws_spark.sources.evolution import (
         logical_projection,
     )
@@ -2335,7 +2272,7 @@ def _rewrite_matched(
     # predicates and transforms are expressed on LOGICAL names — evaluate
     # them on the mapped view; file discovery and the kept-file list stay
     # physical (evolution.py)
-    sch = m.get("schema")
+    sch = m["schema"]
     df = _logical(
         _scan_files(spark, files, sch).withColumn(
             "__file", F.input_file_name()
@@ -2367,16 +2304,13 @@ def _rewrite_matched(
         n_matched = matched_scope.filter(hit).count()
         replacement = transform(matched_scope, hit)
         if replacement is not None:
-            if sch is not None:
-                from web_analytics_on_aws_spark.sources.evolution import (
-                    to_physical,
-                )
+            from web_analytics_on_aws_spark.sources.evolution import (
+                to_physical,
+            )
 
-                # net-new SET columns require evolve_add_column first on a
-                # mapped table (to_physical refuses unknown names) — the
-                # implicit widening of unmapped tables would bypass field-id
-                # allocation
-                replacement = to_physical(replacement, sch, op)
+            # net-new SET columns require evolve_add_column first
+            # (to_physical refuses unknown names and mistyped values)
+            replacement = to_physical(replacement, sch, op)
             # hidden partitioning (round 7): replacement rows route through
             # the CURRENT spec — Iceberg CoW rewrites adopt the current
             # spec — so DML never leaves untupled (unprunable) files in a
@@ -2407,7 +2341,7 @@ def _rewrite_matched(
             cons = table_constraints(table)
             if cons:
                 check_constraints(
-                    _logical(spark.read.parquet(*new_files), sch), cons
+                    _logical(_scan_files(spark, new_files, sch), sch), cons
                 )
     version = cur + 1
     _publish(
@@ -2459,7 +2393,7 @@ def delete_where_mor(spark: SparkSession, table: str, predicate) -> dict:
     # materialize the metadata pseudo-columns FIRST — they only resolve on
     # the file-source relation, not through later projections
     scan = (
-        _scan_files(spark, files, m.get("schema"))
+        _scan_files(spark, files, m["schema"])
         .withColumn("__f", F.col("_metadata.file_path"))
         .withColumn("__p", F.col("_metadata.row_index"))
     )
@@ -2475,7 +2409,7 @@ def delete_where_mor(spark: SparkSession, table: str, predicate) -> dict:
     scan = _apply_equality_deletes(spark, scan, m, file_uri_col="__f")
     # predicate is on LOGICAL names; positions are name-agnostic, so the
     # sidecar itself needs no translation
-    matched = _logical(scan, m.get("schema"), keep=("__f", "__p")).filter(
+    matched = _logical(scan, m["schema"], keep=("__f", "__p")).filter(
         hit
     ).select(F.col("__f").alias("file"), F.col("__p").alias("pos"))
     new_dv = _write_data_files(matched, table)
@@ -2537,9 +2471,17 @@ def _check_metadata_path_roundtrip(
         )
 
 
-def _table_columns(spark: SparkSession, m: dict) -> list[str]:
-    """Head schema column names (union across files, evolution-aware)."""
-    return _scan_files(spark, m["files"], m.get("schema")).columns
+def _source_on_schema(source: DataFrame, sch: dict, op: str) -> DataFrame:
+    """A MERGE/upsert source in the table's physical names: it must carry
+    every schema column, extra columns are dropped (a merge never evolves
+    the schema), and each column's type is checked (to_physical)."""
+    from web_analytics_on_aws_spark.sources.evolution import to_physical
+
+    names = [f["name"] for f in sch["fields"]]
+    lacking = sorted(set(names) - set(source.columns))
+    if lacking:
+        raise ValueError(f"{op}: source lacks table columns {lacking}")
+    return to_physical(source.select(*names), sch, op)
 
 
 def _probe_file_with_rows(table: str, m: dict) -> str | None:
@@ -2572,21 +2514,15 @@ def _probe_file_with_rows(table: str, m: dict) -> str | None:
     )
 
 
-def _check_key_types(
-    spark: SparkSession, m: dict, key_df: DataFrame, op: str
-) -> None:
+def _check_key_types(m: dict, key_df: DataFrame, op: str) -> None:
     """Equality-delete sidecar keys must TYPE-match the table's head
     schema: a mistyped key (string ids vs a bigint column) would commit a
     sidecar whose read-time eqNullSafe comparison goes through implicit
     casts and can silently match nothing — the same silent-no-op class the
-    name check prevents (ADVICE r3). Raise loudly at commit time. Mapped
-    tables resolve the head types from the schema block alone (no file
-    list needed — O(1) on sharded manifests)."""
-    sch = m.get("schema")
-    if sch is not None:
-        head = {f["phys"]: f["type"] for f in sch["fields"]}
-    else:
-        head = dict(_scan_files(spark, m["files"], None).dtypes)
+    name check prevents (ADVICE r3). Raise loudly at commit time. The
+    head types come from the schema block alone (no file list needed —
+    O(1) on sharded manifests)."""
+    head = {f["phys"]: f["type"] for f in m["schema"]["fields"]}
     bad = {
         k: (t, head[k]) for k, t in key_df.dtypes if k in head and t != head[k]
     }
@@ -2621,38 +2557,20 @@ def delete_keys_mor(
         last = last_committed_batch(table, txn[0])
         if last is not None and int(txn[1]) <= last:
             return {"version": cur, "operation": "delete-keys", "replayed": True}
-    # head first: a MAPPED table's delete-keys commit never needs the
-    # per-file maps (key checks resolve from the schema block, the probe
-    # from segment summaries) — O(head). Unmapped tables still hydrate for
-    # the union-schema column check.
-    head = _read_manifest_head(table, cur)
-    m = (
-        head
-        if head.get("schema") is not None
-        else _hydrate_manifest(table, head)
-    )
-    if m.get("schema") is not None:
-        # column mapping: sidecars store PHYSICAL key names — the read-side
-        # resolvers (_apply_equality_deletes, the change-feed engine) all
-        # operate on raw physical files
-        from web_analytics_on_aws_spark.sources.evolution import to_physical
+    # head only: the delete-keys commit never needs the per-file maps (key
+    # checks resolve from the schema block, the probe from segment
+    # summaries) — O(head)
+    m = _read_manifest_head(table, cur)
+    # column mapping: sidecars store PHYSICAL key names — the read-side
+    # resolvers (_apply_equality_deletes, the change-feed engine) all
+    # operate on raw physical files. A typo'd key column would commit a
+    # poison pill every read then chokes on: to_physical refuses it
+    # BEFORE publishing (review r3 finding).
+    from web_analytics_on_aws_spark.sources.evolution import to_physical
 
-        keys_df = to_physical(keys_df, m["schema"], "delete_keys_mor")
+    keys_df = to_physical(keys_df, m["schema"], "delete_keys_mor")
     key_cols = list(keys_df.columns)
-    # a typo'd key column would commit a poison pill every read then
-    # chokes on — validate against the table schema BEFORE publishing
-    # (review r3 finding). Mapped tables validated the LOGICAL names in
-    # to_physical above; the file union still lists dropped physical
-    # columns and may lack freshly added ones, so it is not the contract
-    # there.
-    if m.get("schema") is None:
-        missing = set(key_cols) - set(_table_columns(spark, m))
-        if missing:
-            raise ValueError(
-                f"equality-delete key columns {sorted(missing)} not in "
-                "table schema"
-            )
-    _check_key_types(spark, m, keys_df, "delete_keys_mor")
+    _check_key_types(m, keys_df, "delete_keys_mor")
     _check_metadata_path_roundtrip(spark, table, m)
     sidecars = _write_data_files(keys_df.dropDuplicates(key_cols), table)
     version = cur + 1
@@ -2697,50 +2615,26 @@ def upsert_keys_mor(
         last = last_committed_batch(table, txn[0])
         if last is not None and int(txn[1]) <= last:
             return {"version": cur, "operation": "upsert-keys", "replayed": True}
-    head = _read_manifest_head(table, cur)
-    sch = head.get("schema")
-    if sch is not None:
-        # translate the logical source/keys once; everything below —
-        # uniqueness check, sidecars, data files, sequence stamping —
-        # runs on physical names exactly like an unmapped table
-        from web_analytics_on_aws_spark.sources.evolution import (
-            to_physical,
-            translate_keys,
-        )
+    # the streaming hot path never hydrates: schema/spec/sort checks are
+    # head-only, the roundtrip probe is summary-guided, and the publish is
+    # a pure delta (O(|batch|) metadata per trigger regardless of table
+    # size)
+    m = _read_manifest_head(table, cur)
+    sch = m["schema"]
+    # translate the logical source/keys once; everything below —
+    # uniqueness check, sidecars, data files, sequence stamping — runs on
+    # physical names
+    source = _source_on_schema(source, sch, "upsert_keys_mor")
+    from web_analytics_on_aws_spark.sources.evolution import translate_keys
 
-        source = to_physical(source, sch, "upsert_keys_mor")
-        keys = translate_keys(sch, keys, "upsert_keys_mor")
+    keys = translate_keys(sch, keys, "upsert_keys_mor")
     src = source.persist()
     try:
         n_src = src.count()
         if src.select(*keys).distinct().count() != n_src:
             raise ValueError(f"upsert source is not unique on {keys}")
-        # the streaming hot path: a MAPPED table never hydrates —
-        # schema/spec/sort checks are head-only, the roundtrip probe is
-        # summary-guided, and the publish is a pure delta (O(|batch|)
-        # metadata per trigger regardless of table size)
-        m = head if sch is not None else _hydrate_manifest(table, head)
-        # same column contract as merge_into (review r3 finding): the
-        # source must carry the table's columns; extras are dropped —
-        # mode="mor" and mode="cow" streams produce the same table schema.
-        # Mapped tables: the contract is the SCHEMA's physical columns —
-        # the file union still carries dropped columns and may lack
-        # freshly added ones.
-        table_cols = (
-            [f["phys"] for f in sch["fields"]]
-            if sch is not None
-            else _table_columns(spark, m)
-        )
-        lacking = set(table_cols) - set(src.columns)
-        if lacking:
-            raise ValueError(
-                f"upsert source lacks table columns {sorted(lacking)}"
-            )
-        if not set(keys) <= set(table_cols):
-            raise ValueError(f"upsert keys {keys} not all in table schema")
-        _check_key_types(spark, m, src.select(*keys), "upsert_keys_mor")
+        _check_key_types(m, src.select(*keys), "upsert_keys_mor")
         _check_metadata_path_roundtrip(spark, table, m)
-        src_proj = src.select(*table_cols)
         sidecars = _write_data_files(src.select(*keys), table)
         # the appended data half routes through the current partition spec
         # exactly like commit_append — a streaming MOR upsert sink must not
@@ -2755,15 +2649,15 @@ def upsert_keys_mor(
             )
 
             data_files, fparts = write_partitioned_files(
-                src_proj, table, cur_spec, pblock["specs"][str(cur_spec)],
+                src, table, cur_spec, pblock["specs"][str(cur_spec)],
                 sort_cols=(m.get("sort_order") or {}).get("cols"),
             )
         else:
-            data_files = _write_data_files(_sorted_for_write(src_proj, m), table)
+            data_files = _write_data_files(_sorted_for_write(src, m), table)
         cons = table_constraints(table)
         if cons:
             check_constraints(
-                _logical(spark.read.parquet(*data_files), sch), cons
+                _logical(_scan_files(spark, data_files, sch), sch), cons
             )
         version = cur + 1
         entries = _manifest_eq_deletes(m) + [
@@ -2807,7 +2701,7 @@ def convert_equality_deletes(spark: SparkSession, table: str) -> dict:
     # and simpler: positions of (pos-delete survivors) minus (full-read
     # survivors) — both anti joins over the same base scan.
     base = (
-        _scan_files(spark, m["files"], m.get("schema"))
+        _scan_files(spark, m["files"], m["schema"])
         .withColumn("__f", F.col("_metadata.file_path"))
         .withColumn("__p", F.col("_metadata.row_index"))
     )
@@ -2882,11 +2776,10 @@ def restore_version(spark: SparkSession, table: str, version: int) -> int:
         eq_deletes=_manifest_eq_deletes(target),
         file_seq=_manifest_file_seq(target),
         # Delta RESTORE restores data AND schema: the restored version's
-        # column mapping becomes the head's (None explicitly CLEARS a
-        # mapping added after the restore target — pre-evolution reads);
-        # likewise the partition spec + per-file tuples re-pin to the
-        # target's (the head may have dropped the restored files)
-        schema=target.get("schema"),
+        # column mapping becomes the head's; likewise the partition spec +
+        # per-file tuples re-pin to the target's (the head may have dropped
+        # the restored files)
+        schema=target["schema"],
         partitioning=target.get("partitioning"),
         file_partitions=target.get("file_partitions"),
         # column stats re-pin to the target's too (ADVICE r6): _publish
@@ -2966,7 +2859,7 @@ def compact_deletes(spark: SparkSession, table: str) -> dict:
     sort_cols = (m.get("sort_order") or {}).get("cols")
     for gkey, grp in groups.items():
         survivors = _apply_position_deletes(
-            spark, _scan_files(spark, grp, m.get("schema")), dvs
+            spark, _scan_files(spark, grp, m["schema"]), dvs
         )
         if sort_cols and all(c in survivors.columns for c in sort_cols):
             # write-ordered table: Spark's split packing can merge several
@@ -3166,17 +3059,14 @@ def cluster_zorder(
     head_m = _read_manifest(table, cur)
     _require_no_deletes(table, head_m, "cluster_zorder")
     files = head_m["files"]
-    if head_m.get("schema") is not None:
-        # caller names logical columns; the rewrite itself stays physical
-        # (files keep their storage names — clustering changes layout only)
-        from web_analytics_on_aws_spark.sources.evolution import (
-            translate_keys,
-        )
+    # caller names logical columns; the rewrite itself stays physical
+    # (files keep their storage names — clustering changes layout only)
+    from web_analytics_on_aws_spark.sources.evolution import translate_keys
 
-        zorder_by = translate_keys(
-            head_m["schema"], list(zorder_by), "cluster_zorder"
-        )
-    df = _scan_files(spark, files, head_m.get("schema"))
+    zorder_by = translate_keys(
+        head_m["schema"], list(zorder_by), "cluster_zorder"
+    )
+    df = _scan_files(spark, files, head_m["schema"])
     z = _zorder_column(df, zorder_by, bits=bits)
     head_fp = head_m.get("file_partitions", {})
     groups: dict = {}
@@ -3195,7 +3085,7 @@ def cluster_zorder(
         total = sum(_file_bytes(head_fs, f) for f in grp)
         n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
         clustered = (
-            _scan_files(spark, grp, head_m.get("schema"))
+            _scan_files(spark, grp, head_m["schema"])
             .withColumn("__z", z)
             .repartitionByRange(n_out, "__z")
             .sortWithinPartitions("__z")
@@ -3295,7 +3185,7 @@ def optimize(
     for key, grp in groups.items():
         total = sum(_file_bytes(head_fs, f) for f in grp)
         n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
-        merged = _scan_files(spark, grp, head_m.get("schema"))
+        merged = _scan_files(spark, grp, head_m["schema"])
         if sort_cols and all(c in merged.columns for c in sort_cols):
             # sorted table: a plain coalesce would merge each input file's
             # narrow band into one wide-envelope output, silently undoing
@@ -3835,17 +3725,13 @@ def merge_into(
     head_m = _read_manifest(table, cur)
     _require_no_deletes(table, head_m, "merge")
     files = head_m["files"]
-    sch = head_m.get("schema")
-    if sch is not None:
-        # translate once at the boundary; the whole CoW engine below then
-        # runs on physical names (evolution.py)
-        from web_analytics_on_aws_spark.sources.evolution import (
-            to_physical,
-            translate_keys,
-        )
+    sch = head_m["schema"]
+    # translate once at the boundary; the whole CoW engine below then runs
+    # on physical names (evolution.py)
+    from web_analytics_on_aws_spark.sources.evolution import translate_keys
 
-        source = to_physical(source, sch, "merge_into")
-        keys = translate_keys(sch, keys, "merge_into")
+    source = _source_on_schema(source, sch, "merge_into")
+    keys = translate_keys(sch, keys, "merge_into")
 
     src = source.persist()
     try:
@@ -3856,16 +3742,6 @@ def merge_into(
         target = _scan_files(spark, files, sch).withColumn(
             "__file", F.input_file_name()
         )
-        # mapped tables: the column contract is the schema's physical set
-        # (file union carries dropped columns / may lack fresh adds)
-        want_cols = (
-            [f["phys"] for f in sch["fields"]]
-            if sch is not None
-            else [c for c in target.columns if c != "__file"]
-        )
-        missing = set(want_cols) - set(src.columns)
-        if missing:
-            raise ValueError(f"merge source lacks table columns {sorted(missing)}")
         key_df = src.select(*keys)
         touched = {
             _normalize_file(r["__file"])
@@ -3879,54 +3755,28 @@ def merge_into(
             raise RuntimeError(
                 f"matched files not in manifest v{cur}: {sorted(unknown)[:3]}"
             )
-        # zero-row files (the schema carrier of an empty create-table
-        # append) hold nothing to carry: a merge that writes rows drops
-        # them, so no pre-spec straggler outlives the first upsert
-        fstats = head_m.get("file_stats") or {}
-        empty = {
-            f for f in files
-            if n_src and int((fstats.get(f) or {}).get("rows", -1)) == 0
-        }
-        removed = touched | empty
-        kept = [f for f in files if f not in removed]
+        kept = [f for f in files if f not in touched]
         # stats count matched SOURCE keys, not matched target rows: a source
         # key hitting N>1 target rows must not inflate rows_updated or push
         # rows_inserted negative (ADVICE r2). The merge itself replaces ALL
         # matched target rows with the one source row.
-        table_cols = want_cols
         n_matched = 0
         if touched:
+            # the scan reads the schema's physical columns only: dropped
+            # columns' bytes age out here (the documented contract)
             scope = _scan_files(spark, sorted(touched), sch)
-            if sch is not None:
-                # rewrite under the schema's physical columns: dropped
-                # columns' bytes age out here (the documented contract),
-                # freshly added columns null-pad via the union below
-                scope = scope.select(
-                    *[c for c in scope.columns if c in set(want_cols)]
-                )
             n_matched = src.join(
                 scope.select(*keys).distinct(), keys, "leftsemi"
             ).count()
             survivors = scope.join(key_df, keys, "left_anti")
-            # mapped: project src to the FULL physical schema so inserted/
-            # updated rows keep freshly-added columns scope predates
-            # (allowMissingColumns null-pads survivors there)
-            src_side = (
-                src.select(*table_cols)
-                if sch is not None
-                else src.select(*survivors.columns)
-            )
-            replacement = survivors.unionByName(
-                src_side, allowMissingColumns=True
             # replacement carries ~the touched files' volume — write it as
             # ~that many files, not one per shuffle partition (a 1-file
             # merge scope must not fragment into 17 small files)
-            ).coalesce(max(1, len(touched)))
+            replacement = survivors.unionByName(src).coalesce(
+                max(1, len(touched))
+            )
         else:
-            # same projection as the matched path: extra source columns are
-            # dropped on BOTH paths (merge never evolves the table schema;
-            # use commit_append/replace for schema changes) — ADVICE r2
-            replacement = src.select(*table_cols)
+            replacement = src
         # hidden partitioning (round 7): merged rows route through the
         # CURRENT spec like every other rewrite — a keyed MERGE must not
         # slowly de-partition its table (updated rows may also MOVE to a
@@ -3951,7 +3801,7 @@ def merge_into(
         cons = table_constraints(table)
         if cons:
             check_constraints(
-                _logical(spark.read.parquet(*new_files), sch), cons
+                _logical(_scan_files(spark, new_files, sch), sch), cons
             )
         version = cur + 1
         _publish(
@@ -3959,7 +3809,7 @@ def merge_into(
             file_partitions=fparts,
             file_stats=collect_file_stats(new_files, spark),
             new_files=new_files,
-            removed_files=sorted(removed),
+            removed_files=sorted(touched),
         )
         return {
             "version": version,
@@ -4009,29 +3859,31 @@ def table_changes(
         # changed data + one key-column pass, acceptable for the
         # maintenance/CDC window sizes eq deletes live in — maintenance
         # (convert/compact) restores the pure file-diff fast path.
-        import pyspark.sql.functions as F
-        from pyspark.sql.types import StringType, StructField
+        from pyspark.sql.types import (
+            StringType,
+            StructField,
+            StructType,
+            _parse_datatype_string,
+        )
 
         from web_analytics_on_aws_spark.sources.changes_stream_datasource import (
             changes_rows,
         )
-        from web_analytics_on_aws_spark.sources.snapshot_datasource import (
-            _unified_arrow_schema,
-        )
 
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        # Schema unifies BOTH endpoints' files (allowMissingColumns
-        # semantics, matching the fast path's mergeSchema reads): a column
-        # present only in one endpoint must survive into the events, or
-        # delete rows lose those values and rows differing only in that
-        # column wrongly cancel.
-        base = from_arrow_schema(
-            _unified_arrow_schema(
-                list(dict.fromkeys(m_new["files"] + m_old["files"]))
-            )
+        # The physical columns of BOTH endpoints' schema blocks, at the TO
+        # version's declared type where both have them: a column present
+        # only in one endpoint must survive into the events, or delete rows
+        # lose those values and rows differing only in that column wrongly
+        # cancel.
+        types = {f["phys"]: f["type"] for f in m_old["schema"]["fields"]}
+        types.update({f["phys"]: f["type"] for f in m_new["schema"]["fields"]})
+        base = StructType(
+            [
+                StructField(p, _parse_datatype_string(t), True)
+                for p, t in types.items()
+            ]
         )
-        names = [f.name for f in base.fields]
+        names = list(types)
         rows = [
             row[:-1]  # drop the commit-version stamp; CDF output has none
             for row in changes_rows(table, from_version, to_version, names)
@@ -4039,7 +3891,7 @@ def table_changes(
         schema = base.add(StructField("_change_type", StringType()))
         return _logical(
             spark.createDataFrame(rows, schema),
-            m_new.get("schema"),
+            m_new["schema"],
             keep=("_change_type",),
         )
     f_old, f_new = set(m_old["files"]), set(m_new["files"])
@@ -4057,7 +3909,7 @@ def table_changes(
         # scan both endpoints under the TO-version schema so widened types
         # align across the exceptAll diff (the final _logical renders with
         # the same schema)
-        df = _scan_files(spark, paths, m_new.get("schema"))
+        df = _scan_files(spark, paths, m_new["schema"])
         return _apply_position_deletes(spark, df, dvs)
 
     # MOR sidecar diffs on files present in BOTH versions: positions ADDED
@@ -4081,7 +3933,7 @@ def table_changes(
         )
         dv_added = dv_new.join(dv_old_df, ["file", "pos"], "left_anti")
         dv_removed = dv_old_df.join(dv_new, ["file", "pos"], "left_anti")
-        scan = _scan_files(spark, common, m_new.get("schema"))
+        scan = _scan_files(spark, common, m_new["schema"])
         cols0 = scan.columns
         keyed = scan.withColumn("__f", F.col("_metadata.file_path")).withColumn(
             "__p", F.col("_metadata.row_index")
@@ -4111,7 +3963,7 @@ def table_changes(
             empty = read_snapshot(spark, table, version=to_version).limit(0)
             return empty.withColumn("_change_type", F.lit("insert")).limit(0)
         out = (
-            _scan_files(spark, common, m_new.get("schema"))
+            _scan_files(spark, common, m_new["schema"])
             .limit(0)
             .withColumn("_change_type", F.lit("insert"))
         )
@@ -4141,4 +3993,4 @@ def table_changes(
         )
     # events render under the TO version's logical schema (column mapping):
     # consumers see the same names a read of that version shows
-    return _logical(out, m_new.get("schema"), keep=("_change_type",))
+    return _logical(out, m_new["schema"], keep=("_change_type",))
